@@ -49,9 +49,11 @@ class EngineConfig:
     sessions_path: str | None = None  # replaces DATABASE_URL
     api_key: str | None = None  # SESSION_API_KEY (src/main.rs:82-89)
     # mutation-seam backend for every engine table: "parquet" (plain
-    # overwrite), "versioned" (manifest commits: snapshot isolation, time
-    # travel, rollback — sources/versioned_tables.py), or "delta" (real
-    # Delta MERGE, import-gated). [storage] backend=... / STORAGE_BACKEND.
+    # overwrite) or "versioned", the transactional backend (manifest
+    # commits: snapshot isolation, time travel, rollback —
+    # sources/versioned_tables.py). A Delta backend waits until delta-spark
+    # and its jars are in the repository. [storage] backend=... /
+    # STORAGE_BACKEND.
     table_backend: str = "parquet"
 
     @classmethod
@@ -104,6 +106,6 @@ class EngineConfig:
         cfg.table_backend = (
             env.get("STORAGE_BACKEND") or storage.get("backend") or cfg.table_backend
         ).lower()
-        if cfg.table_backend not in ("parquet", "versioned", "delta"):
+        if cfg.table_backend not in ("parquet", "versioned"):
             raise ValueError(f"unknown storage backend {cfg.table_backend!r}")
         return cfg

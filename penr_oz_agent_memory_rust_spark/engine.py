@@ -59,7 +59,7 @@ class MemoryEngine:
         self._clock = clock or (lambda: dt.datetime.now(dt.timezone.utc).replace(tzinfo=None))
         # the ONE constructor the backend choice flows through — the whole
         # engine mutates tables only via the seam interface, so swapping to
-        # the manifest-versioned (or Delta) backend changes nothing else
+        # the manifest-versioned backend changes nothing else
         table_cls = self._table_cls(config.table_backend)
         # uuid ids make min/max skipping useless (every file spans the
         # keyspace); the versioned backend's per-file blooms restore
@@ -89,10 +89,6 @@ class MemoryEngine:
             )
 
             return VersionedParquetTable
-        if backend == "delta":
-            from penr_oz_agent_memory_rust_spark.sources.delta_tables import DeltaTableIO
-
-            return DeltaTableIO
         return ParquetTable
 
     # ------------------------------------------------------- helpers
@@ -171,7 +167,7 @@ class MemoryEngine:
         if existed:
             # seam mutation: plain parquet rewrites the table; the
             # versioned backend prunes to the files whose key stats can
-            # contain the id; a Delta backend is a transactional DELETE
+            # contain the id
             self.memories.delete_keys([memory_id], "id")
         return existed
 
@@ -213,10 +209,10 @@ class MemoryEngine:
         )
         new = vector_store.enrich_session_id(new)  # P8
         # S4 via the seam: id is always set here, so key-replace == the
-        # last-writer-wins reduction; Delta backend = one MERGE INTO commit
+        # last-writer-wins reduction
         points.merge_upsert(new, ["id"])
         if session_id is not None:
-            # best-effort touch (routes.rs:281-283); Delta backend = UPDATE
+            # best-effort touch (routes.rs:281-283)
             self.sessions.update_where(
                 F.col("id").isin([session_id]),
                 {"updated_at": F.lit(self._clock()).cast("timestamp")},

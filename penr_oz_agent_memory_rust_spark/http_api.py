@@ -23,32 +23,26 @@ the route/auth/error contract has an executable spec:
 
 Auth (P10): the `x-api-key` header is forwarded to the engine, which does
 the constant-time compare (reference src/routes.rs:479-502). Errors map to
-the reference's status contract: ValidationError 400, AuthenticationError
-401, NotFoundError 404, NotConfiguredError 503.
+the reference's status contract through each error's `status`
+(errors.py): ValidationError 400, AuthenticationError 401, NotFoundError
+404, UpstreamError 502, NotConfiguredError 503. A non-integer `limit` or
+`offset` is a 400; any other exception is a 500 with a JSON `error`, so
+every request gets a status.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import json
+import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlsplit
 
 from penr_oz_agent_memory_rust_spark.engine import MemoryEngine
-from penr_oz_agent_memory_rust_spark.errors import (
-    AuthenticationError,
-    NotConfiguredError,
-    NotFoundError,
-    ValidationError,
-)
+from penr_oz_agent_memory_rust_spark.errors import EngineError, NotFoundError, ValidationError
 
-_ERROR_STATUS = {
-    ValidationError: 400,
-    AuthenticationError: 401,
-    NotFoundError: 404,
-    NotConfiguredError: 503,
-}
+_log = logging.getLogger(__name__)
 
 
 def _jsonable(v):
@@ -63,6 +57,13 @@ def _jsonable(v):
 
 def _rows(df) -> list[dict]:
     return [_jsonable(r.asDict(recursive=True)) for r in df.collect()]
+
+
+def _int(params: dict, key: str, default: int) -> int:
+    try:
+        return int(params.get(key, default))
+    except (TypeError, ValueError) as e:
+        raise ValidationError(f"{key} must be an integer") from e
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -122,7 +123,7 @@ class _Handler(BaseHTTPRequestHandler):
                 b = self._body()
                 hits = eng.api_search(
                     b.get("text"),
-                    limit=int(b.get("limit", 5)),
+                    limit=_int(b, "limit", 5),
                     score_threshold=b.get("score_threshold"),
                     provider=b.get("provider"),
                 )
@@ -140,7 +141,7 @@ class _Handler(BaseHTTPRequestHandler):
             if method == "GET" and parts[:2] == ["memory", "search"]:
                 hits = eng.search_memory(
                     q.get("q"),
-                    limit=int(q.get("limit", 10)),
+                    limit=_int(q, "limit", 10),
                     session=q.get("session"),
                 )
                 return self._send(200, {"results": _rows(hits)})
@@ -153,8 +154,8 @@ class _Handler(BaseHTTPRequestHandler):
                 if len(parts) == 3:
                     return self._send(200, eng.get_session(parts[2], api_key=api_key))
                 sessions = eng.list_sessions(
-                    limit=int(q.get("limit", 50)),
-                    offset=int(q.get("offset", 0)),
+                    limit=_int(q, "limit", 50),
+                    offset=_int(q, "offset", 0),
                     api_key=api_key,
                 )
                 return self._send(200, {"sessions": _rows(sessions)})
@@ -162,8 +163,11 @@ class _Handler(BaseHTTPRequestHandler):
                 b = self._body()
                 return self._send(201, eng.create_session(b.get("tags"), api_key=api_key))
             return self._send(404, {"error": f"no route {method} {url.path}"})
-        except tuple(_ERROR_STATUS) as e:
-            return self._send(_ERROR_STATUS[type(e)], {"error": str(e)})
+        except EngineError as e:
+            return self._send(e.status, {"error": str(e)})
+        except Exception as e:  # noqa: BLE001 — answer, never drop the socket
+            _log.exception("%s %s failed", method, url.path)
+            return self._send(500, {"error": f"{type(e).__name__}: {e}"})
 
     def do_GET(self):  # noqa: N802
         self._dispatch("GET")

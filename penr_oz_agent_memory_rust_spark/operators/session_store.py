@@ -8,8 +8,9 @@ through JSON (src/session_store.rs:85-86,174-175).
 
 Spark-first: a `sessions` Parquet table; pagination is
 TakeOrderedAndProject when offset=0, one window otherwise (topk.paginate);
-touch is a conditional column rewrite. The FK existence check the write path
-performs (P9, src/routes.rs:252-263) is the semi/anti-join pair below.
+touch is the table seam's `update_where` (sources/tables.py). The FK
+existence check the write path performs (P9, src/routes.rs:252-263) is the
+semi/anti-join pair below.
 """
 
 from __future__ import annotations
@@ -39,36 +40,6 @@ def get_session(sessions: DataFrame, session_id: str) -> DataFrame:
     """C2: point lookup (reference src/session_store.rs:127-136); empty
     result = the route's 404 (src/routes.rs:568-585)."""
     return sessions.filter(F.col("id") == session_id)
-
-
-def touch_sessions(
-    sessions: DataFrame, session_ids: list[str] | DataFrame, now: dt.datetime | None = None
-) -> DataFrame:
-    """C3: UPDATE updated_at WHERE id IN (...) as a conditional rewrite
-    (reference src/session_store.rs:111-120). Best-effort in the reference
-    (result ignored, src/routes.rs:281-283) — here it is a pure plan."""
-    ts = F.lit(now).cast("timestamp") if now is not None else F.current_timestamp()
-    if isinstance(session_ids, list):
-        cond = F.col("id").isin(session_ids)
-        return sessions.withColumn(
-            "updated_at", F.when(cond, ts).otherwise(F.col("updated_at"))
-        )
-    # DataFrame id set: broadcast marker join instead of collect+isin — the
-    # touch set never passes through the driver, so the rewrite stays a pure
-    # plan at any id-set size
-    marks = (
-        session_ids.select(F.col(session_ids.columns[0]).alias("id"))
-        .distinct()
-        .withColumn("__touch", F.lit(True))
-    )
-    return (
-        sessions.join(F.broadcast(marks), "id", "left")
-        .withColumn(
-            "updated_at",
-            F.when(F.col("__touch"), ts).otherwise(F.col("updated_at")),
-        )
-        .drop("__touch")
-    )
 
 
 def list_sessions(sessions: DataFrame, limit: int = 50, offset: int = 0) -> DataFrame:

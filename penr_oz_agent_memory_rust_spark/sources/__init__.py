@@ -1,1 +1,1 @@
-__all__ = ["tables", "embedding_providers", "ann_sink", "ann_push", "delta_tables", "bucketed", "python_datasource"]
+__all__ = ["tables", "embedding_providers", "ann_sink", "ann_push", "bucketed", "python_datasource"]

@@ -1,23 +1,23 @@
 """Table IO seam (SURVEY §7 "Hard parts: mutability on immutable storage").
 
 All engine tables are partitioned Parquet. Mutations (delete S3, upsert S4,
-touch C3) are read-modify-overwrite behind this seam so a Delta/Iceberg
-backend can be swapped in without touching operators. ``ensure_table``
-reproduces the reference's create-if-absent collection DDL
+touch C3) are read-modify-overwrite behind this seam, so the manifest-versioned
+backend (sources/versioned_tables.py) swaps in without touching operators.
+``ensure_table`` reproduces the reference's create-if-absent collection DDL
 (reference src/vector_store.rs:112-200) as "write an empty DataFrame with the
 declared schema when the path does not exist".
 
-Scale notes: overwrite-based mutation is O(table) — fine for the harness; the
-seam is exactly where MERGE INTO lands when a transactional format is on the
-classpath. Reads go through ``spark.read.parquet`` so Catalyst gets pushdown,
-pruning, and partition elimination for free.
+Scale notes: overwrite-based mutation is O(table), written once: the new rows
+go to a staged sibling directory that is then swapped in with two renames.
+Reads go through ``spark.read.parquet`` so Catalyst gets pushdown, pruning,
+and partition elimination for free.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -120,15 +120,11 @@ class ParquetTable:
         path: str,
         schema: T.StructType,
         partition_cols: list[str] | None = None,
-        fmt: str = "parquet",
     ):
         self.spark = spark
         self.path = path
         self.schema = schema
         self.partition_cols = partition_cols or []
-        # "parquet" (default) or "orc" — both columnar with pushdown; ORC
-        # exists for interop with ORC-standardized lakes (Hive heritage)
-        self.fmt = fmt
 
     def exists(self) -> bool:
         return os.path.exists(self.path)
@@ -144,15 +140,15 @@ class ParquetTable:
         src/vector_store.rs:112-200 ensure_collection)."""
         if not self.exists():
             empty = self.spark.createDataFrame([], self.schema)
-            self._writer(empty, "overwrite").format(self.fmt).save(self.path)
+            self._writer(empty, "overwrite").parquet(self.path)
 
     def read(self) -> DataFrame:
         self.ensure()
-        return self.spark.read.schema(self.schema).format(self.fmt).load(self.path)
+        return self.spark.read.schema(self.schema).parquet(self.path)
 
     def append(self, df: DataFrame) -> None:
         self.ensure()
-        self._writer(df, "append").format(self.fmt).save(self.path)
+        self._writer(df, "append").parquet(self.path)
 
     def compact(self, target_partitions: int = 1) -> int:
         """Small-file compaction: micro-batch appends leave one file per
@@ -160,39 +156,48 @@ class ParquetTable:
         partitioned). Returns the file count before compaction. At real
         scale this is the nightly OPTIMIZE job; coalesce avoids a shuffle.
         """
-        import glob
-
-        before = len(
-            glob.glob(os.path.join(self.path, "**", f"*.{self.fmt}"), recursive=True)
-        )
-        current = self.read().coalesce(target_partitions)
-        self.overwrite(current)
+        current = self.read()
+        before = len(current.inputFiles())
+        self.overwrite(current.coalesce(target_partitions))
         return before
 
     def overwrite(self, df: DataFrame) -> None:
-        """Full rewrite via a temp location (safe read-then-overwrite: Spark
-        cannot overwrite a path it is concurrently reading)."""
-        tmp = tempfile.mkdtemp(prefix="poz_tbl_") + "/data"
-        self._writer(df, "overwrite").format(self.fmt).save(tmp)
-        materialized = self.spark.read.schema(self.schema).format(self.fmt).load(tmp)
-        self._writer(materialized, "overwrite").format(self.fmt).save(self.path)
-        shutil.rmtree(os.path.dirname(tmp), ignore_errors=True)
+        """Replace the table with `df`, writing it once. `df` may read this
+        table: it is written to a staged sibling directory (same
+        filesystem), so the read finishes before the table is touched;
+        the old directory is then renamed aside, the staged one renamed
+        into place, and the old one removed. The table path is missing
+        only between the two renames."""
+        base = self.path.rstrip(os.sep)
+        stage = f"{base}.stage-{uuid.uuid4().hex}"
+        try:
+            self._writer(df, "overwrite").parquet(stage)
+        except BaseException:
+            shutil.rmtree(stage, ignore_errors=True)
+            raise
+        old = f"{base}.old-{uuid.uuid4().hex}"
+        if os.path.exists(base):
+            os.rename(base, old)
+        os.rename(stage, base)
+        shutil.rmtree(old, ignore_errors=True)
 
-    # -- mutation interface (shared with the Delta backend) ----------------
-    # On plain Parquet these are read-modify-overwrite, O(table); the
-    # DeltaTableIO twin (sources/delta_tables.py) implements the same three
-    # calls as transactional MERGE/DELETE/UPDATE, O(matched files). Code
-    # written against this interface gets the upgrade by swapping the
-    # constructor.
+    # -- mutation interface ------------------------------------------------
+    # On plain Parquet these are read-modify-overwrite, O(table), one write
+    # each. VersionedParquetTable (sources/versioned_tables.py) implements
+    # the same calls as manifest commits that rewrite only the matched
+    # files. Code written against this interface swaps backends by
+    # swapping the constructor.
 
     def merge_upsert(self, updates: DataFrame, key_cols: list[str]) -> None:
         """Last-writer-wins upsert by key (S4): incoming rows replace
-        same-key rows, others are appended."""
+        same-key rows, others are appended. The result keeps the table's
+        file count (the union with the updates would add one file)."""
         current = self.read()
         survivors = current.join(
             F.broadcast(updates.select(*key_cols).distinct()), key_cols, "left_anti"
         )
-        self.overwrite(survivors.unionByName(updates.select(*[f.name for f in self.schema.fields])))
+        merged = survivors.unionByName(updates.select(*[f.name for f in self.schema.fields]))
+        self.overwrite(merged.coalesce(max(1, len(current.inputFiles()))))
 
     def delete_where(self, condition) -> None:
         """Delete rows matching a Column/SQL-string predicate (S3)."""

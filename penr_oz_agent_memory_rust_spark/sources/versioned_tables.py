@@ -1,6 +1,6 @@
 """Manifest-versioned Parquet table: Delta-style semantics from plain
-files (★ the transactional upgrade of the mutation seam that needs no
-jars — sources/delta_tables.py remains the real-Delta twin, env-gated).
+files (★ the transactional backend of the mutation seam; it needs no
+jars, while a real Delta backend waits until its jars are in the repository).
 
 Layout:
     <path>/files/<commit-uuid>/part-*.parquet     immutable data files
@@ -95,7 +95,6 @@ class VersionedParquetTable:
         partition_cols: list[str] | None = None,  # accepted for seam parity;
         # manifests list files directly, so directory-partition pruning does
         # not apply — filter pushdown still works via parquet row-group stats
-        fmt: str = "parquet",
         merge_key_cap: int = 100_000,
         bloom_cols: list[str] | None = None,
         bloom_bits_per_row: int = 16,
@@ -103,7 +102,6 @@ class VersionedParquetTable:
         self.spark = spark
         self.path = path
         self.schema = schema
-        self.fmt = fmt
         # largest distinct-update-key set merge_upsert/delete-style pruning
         # will collect to the driver for the bisect fast path; above it the
         # overlap test runs as a distributed range join (still exact)
@@ -202,23 +200,21 @@ class VersionedParquetTable:
         (
             df.select(*[f.name for f in sch.fields])
             .write.mode("overwrite")
-            .format(self.fmt)
-            .save(cdir)
+            .parquet(cdir)
         )
         rels = []
-        for pth in glob.glob(os.path.join(cdir, f"*.{self.fmt}")):
-            if self.fmt == "parquet":
-                # drop zero-row part files: they carry no data and no
-                # footer stats (and would erode the skipping index's
-                # coverage guarantees)
-                import pyarrow.parquet as pq
+        import pyarrow.parquet as pq
 
-                try:
-                    if pq.read_metadata(pth).num_rows == 0:
-                        os.unlink(pth)
-                        continue
-                except Exception:  # noqa: BLE001
-                    pass
+        for pth in glob.glob(os.path.join(cdir, "*.parquet")):
+            # drop zero-row part files: they carry no data and no footer
+            # stats (and would erode the skipping index's coverage
+            # guarantees)
+            try:
+                if pq.read_metadata(pth).num_rows == 0:
+                    os.unlink(pth)
+                    continue
+            except Exception:  # noqa: BLE001
+                pass
             rels.append(os.path.relpath(pth, self.path))
         return rels
 
@@ -268,7 +264,7 @@ class VersionedParquetTable:
         per file returns its finished bitmap, so build wall-clock scales
         with the cluster instead of pinning the driver (measured ~1.3
         µs/value single-threaded)."""
-        if not self.bloom_cols or self.fmt != "parquet":
+        if not self.bloom_cols:
             return
         # only string/integral keys: the driver build hashes raw Python
         # values while the executor build hashes Spark's string cast, and
@@ -464,8 +460,7 @@ class VersionedParquetTable:
             return self.spark.createDataFrame([], sch)
         return (
             self.spark.read.schema(sch)
-            .format(self.fmt)
-            .load([os.path.join(self.path, f) for f in keep])
+            .parquet(*[os.path.join(self.path, f) for f in keep])
         )
 
     def _collect_stats(self, rel_files: list[str]) -> dict:
@@ -476,8 +471,6 @@ class VersionedParquetTable:
         the per-file bloom sidecars here — every commit path that creates
         new files flows through this hook, and the files are hot."""
         self._build_blooms(rel_files)
-        if self.fmt != "parquet":
-            return {}
         import pyarrow.parquet as pq
 
         out: dict[str, dict] = {}
@@ -529,8 +522,7 @@ class VersionedParquetTable:
         # reading them under the version's schema yields nulls there
         return (
             self.spark.read.schema(sch)
-            .format(self.fmt)
-            .load([os.path.join(self.path, f) for f in files])
+            .parquet(*[os.path.join(self.path, f) for f in files])
         )
 
     def prune_files(
@@ -570,8 +562,7 @@ class VersionedParquetTable:
             return self.spark.createDataFrame([], sch)
         return (
             self.spark.read.schema(sch)
-            .format(self.fmt)
-            .load([os.path.join(self.path, f) for f in keep])
+            .parquet(*[os.path.join(self.path, f) for f in keep])
         )
 
     def row_count(self, version: int | None = None) -> int | None:
@@ -696,7 +687,7 @@ class VersionedParquetTable:
         (zero-copy); only the overlapping files are anti-joined and
         rewritten, plus the update rows themselves. Mutations thereby
         cost O(matched files), not O(table) — the property DEVIATIONS #7
-        attributed to the (jar-gated) Delta backend. Files without stats
+        asks of a transactional backend. Files without stats
         for any key column fall back to the full rewrite.
 
         Touched-file resolution is EXACT at every update cardinality:
@@ -813,8 +804,7 @@ class VersionedParquetTable:
         if touched:
             overlap = (
                 self.spark.read.schema(sch)
-                .format(self.fmt)
-                .load([os.path.join(self.path, f) for f in touched])
+                .parquet(*[os.path.join(self.path, f) for f in touched])
             )
             parts.append(
                 overlap.join(
@@ -922,7 +912,7 @@ class VersionedParquetTable:
         now = time.time()
         import hashlib as _hl
 
-        for p in glob.glob(os.path.join(self.path, "files", "*", f"*.{self.fmt}")):
+        for p in glob.glob(os.path.join(self.path, "files", "*", "*.parquet")):
             rel = os.path.relpath(p, self.path)
             if rel not in live:
                 try:
@@ -1019,8 +1009,7 @@ class VersionedParquetTable:
                 )
             return (
                 self.spark.read.schema(sch1)
-                .format(self.fmt)
-                .load([os.path.join(self.path, f) for f in added])
+                .parquet(*[os.path.join(self.path, f) for f in added])
                 .withColumn("_change_type", ins_type)
             )
         old, new = self.read(from_version), self.read(v1)
@@ -1127,8 +1116,7 @@ class VersionedParquetTable:
         untouched = [f for f in m["files"] if f not in set(touched)]
         survivors = (
             self.spark.read.schema(sch)
-            .format(self.fmt)
-            .load([os.path.join(self.path, f) for f in touched])
+            .parquet(*[os.path.join(self.path, f) for f in touched])
             .filter(~F.col(key_col).isin(list(keys)))
         )
         new_files = self._write_commit_files(survivors, sch)

@@ -65,8 +65,8 @@ def ingest_stream(
                 for r in prepared.select("session").filter(F.col("session").isNotNull()).distinct().collect()
             ]
             if touched_ids:
-                sessions_table.overwrite(
-                    session_store.touch_sessions(sessions_table.read(), touched_ids)
+                sessions_table.update_where(
+                    F.col("id").isin(touched_ids), {"updated_at": F.current_timestamp()}
                 )
 
     return (
@@ -142,8 +142,8 @@ def ingest_points_stream(
                 for r in prepared.select("session_id").filter(F.col("session_id").isNotNull()).distinct().collect()
             ]
             if touched:
-                sessions_table.overwrite(
-                    session_store.touch_sessions(sessions_table.read(), touched)
+                sessions_table.update_where(
+                    F.col("id").isin(touched), {"updated_at": F.current_timestamp()}
                 )
 
     return (

@@ -47,25 +47,3 @@ def test_bucketed_join_matches_plain_join(spark, sf_dir, bucketed_tables):
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").withColumnRenamed("o_orderkey", "l_orderkey")
     assert bucketed_cnt == li.join(orders, "l_orderkey").count()
-
-
-def test_orc_table_roundtrip_and_compaction(spark, tmp_path):
-    """The table seam is format-agnostic: ORC round-trips with the same
-    ensure/append/overwrite/compact contract as Parquet."""
-    from pyspark.sql import types as T
-
-    from penr_oz_agent_memory_rust_spark.sources.tables import ParquetTable
-
-    schema = T.StructType(
-        [T.StructField("id", T.StringType(), True), T.StructField("v", T.LongType(), True)]
-    )
-    t = ParquetTable(spark, str(tmp_path / "orc_tbl"), schema, fmt="orc")
-    t.append(spark.createDataFrame([("a", 1)], schema))
-    t.append(spark.createDataFrame([("b", 2)], schema))
-    assert {r["id"] for r in t.read().collect()} == {"a", "b"}
-    before = t.compact(target_partitions=1)
-    assert before >= 2
-    assert t.read().count() == 2
-    import glob
-
-    assert glob.glob(str(tmp_path / "orc_tbl") + "/*.orc")

@@ -213,8 +213,9 @@ def test_config_storage_backend_overlay(tmp_path):
     toml.write_text('[storage]\nbackend = "parquet"\n')
     assert EngineConfig.load(str(toml), env={}).table_backend == "parquet"
     assert EngineConfig.load(str(toml), env={"STORAGE_BACKEND": "versioned"}).table_backend == "versioned"
-    try:
-        EngineConfig.load(env={"STORAGE_BACKEND": "bogus"})
-        raise AssertionError("expected ValueError")
-    except ValueError:
-        pass
+    for backend in ("bogus", "delta"):
+        try:
+            EngineConfig.load(env={"STORAGE_BACKEND": backend})
+            raise AssertionError("expected ValueError")
+        except ValueError:
+            pass

@@ -1,7 +1,7 @@
 """HTTP shim e2e: the reference demo client's lifecycle (reference
 examples/agent_client.rs:2-9 — health -> session -> store x5 -> search ->
 context recall -> delete) executed over real HTTP against the stdlib shim,
-plus the route-level error contract (400/401/404/503)."""
+plus the route-level error contract (400/401/404/500/503)."""
 
 from __future__ import annotations
 
@@ -136,6 +136,28 @@ def test_error_contract(spark, tmp_path):
         # 404: unknown route
         code, _ = _status_of(lambda: _req(f"{base}/definitely/not/a/route"))
         assert code == 404
+    finally:
+        srv.stop()
+
+
+def test_non_integer_limit_is_400(server):
+    code, body = _status_of(lambda: _req(f"{server.url}/memory/search?q=hello&limit=abc"))
+    assert code == 400 and "limit" in body["error"]
+    code, body = _status_of(lambda: _req(f"{server.url}/api/sessions?offset=x"))
+    assert code == 400 and "offset" in body["error"]
+
+
+def test_unexpected_exception_is_500(spark, tmp_path):
+    eng = make_engine(spark, tmp_path)
+
+    def broken_health():
+        raise RuntimeError("health probe failed")
+
+    eng.health = broken_health
+    srv = MemoryHttpServer(eng).start()
+    try:
+        code, body = _status_of(lambda: _req(f"{srv.url}/health"))
+        assert code == 500 and "health probe failed" in body["error"]
     finally:
         srv.stop()
 

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from penr_oz_agent_memory_rust_spark.operators import session_store
 from penr_oz_agent_memory_rust_spark.schemas import SESSIONS_SCHEMA
+from penr_oz_agent_memory_rust_spark.sources.tables import ParquetTable
 
 
 def ts(i: int) -> dt.datetime:
@@ -75,18 +76,25 @@ def test_list_limit_clamped(spark, sessions):
     assert session_store.list_sessions(sessions, limit=-5).count() == 1  # clamped to 1
 
 
-def test_touch_advances_updated_at(spark, sessions):
+def _touch(spark, sessions, tmp_path, ids):
+    # C3 is the table seam's update_where, as in the engine and streaming ingest
+    t = ParquetTable(spark, str(tmp_path / "sessions"), SESSIONS_SCHEMA)
+    t.append(sessions)
+    t.update_where(F.col("id").isin(ids), {"updated_at": F.lit(ts(9))})
+    return t.read()
+
+
+def test_touch_advances_updated_at(spark, sessions, tmp_path):
     # src/session_store.rs:296-316
-    touched = session_store.touch_sessions(sessions, ["s1"], now=ts(9))
-    rows = {r["id"]: r for r in touched.collect()}
+    rows = {r["id"]: r for r in _touch(spark, sessions, tmp_path, ["s1"]).collect()}
     assert rows["s1"]["updated_at"] == ts(9)
     assert rows["s1"]["created_at"] == ts(1)  # unchanged
     assert rows["s2"]["updated_at"] == ts(2)  # untouched
 
 
-def test_touch_missing_is_noop(spark, sessions):
+def test_touch_missing_is_noop(spark, sessions, tmp_path):
     # src/session_store.rs:319-326: touch of unknown id affects nothing
-    touched = session_store.touch_sessions(sessions, ["nope"], now=ts(9))
+    touched = _touch(spark, sessions, tmp_path, ["nope"])
     assert touched.filter(F.col("updated_at") == ts(9)).count() == 0
 
 

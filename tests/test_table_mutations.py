@@ -1,19 +1,19 @@
 """One mutation-interface contract, two backends: ParquetTable
-(overwrite-based, always available) and DeltaTableIO (transactional
-MERGE/DELETE/UPDATE, skipped when delta-spark is absent — the env-gated
-seam of DEVIATIONS #7). The assertions are identical, so putting the
-Delta jars on the classpath proves the swap with zero operator changes."""
+(read-modify-overwrite through a staged directory swap) and
+VersionedParquetTable (manifest commits that rewrite only matched files).
+The assertions are identical, so the engine swaps backends with zero
+operator changes (DEVIATIONS #7)."""
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F, types as T
 
-from penr_oz_agent_memory_rust_spark.errors import NotConfiguredError
-from penr_oz_agent_memory_rust_spark.sources.delta_tables import (
-    DeltaTableIO,
-    delta_available,
-)
 from penr_oz_agent_memory_rust_spark.sources.tables import ParquetTable
 from penr_oz_agent_memory_rust_spark.sources.versioned_tables import VersionedParquetTable
 
@@ -27,11 +27,9 @@ SCHEMA = T.StructType(
 
 
 def backends():
-    marks = [] if delta_available() else [pytest.mark.skip(reason="delta-spark absent")]
     return [
         pytest.param(ParquetTable, id="parquet"),
         pytest.param(VersionedParquetTable, id="versioned"),
-        pytest.param(DeltaTableIO, id="delta", marks=marks),
     ]
 
 
@@ -82,11 +80,58 @@ def test_delete_where_column_predicate(spark, make_table):
     assert {r["id"] for r in t.read().collect()} == {"a"}
 
 
-def test_delta_backend_gated_without_package(spark, tmp_path):
-    if delta_available():
-        pytest.skip("delta present; gating path not reachable")
-    with pytest.raises(NotConfiguredError, match="delta-spark"):
-        DeltaTableIO(spark, str(tmp_path / "d"), SCHEMA)
+def _temp_copies() -> set[str]:
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), "poz_tbl_*")))
+
+
+def _swap_leftovers(path: str, temp_before: set[str]) -> list[str]:
+    siblings = glob.glob(f"{path}.stage-*") + glob.glob(f"{path}.old-*")
+    return siblings + sorted(_temp_copies() - temp_before)
+
+
+def test_overwrite_staged_swap_leaves_only_the_table(spark, make_table, tmp_path):
+    """Each mutation writes once to a staged sibling that is renamed into
+    place: no staging or old directory and no temp copy remains, a
+    self-read overwrite sees the pre-swap rows, and the directory holds
+    only the current part files, so a plain parquet reader reads it."""
+    t = make_table(ParquetTable)
+    temp_before = _temp_copies()
+    t.overwrite(t.read().filter(F.col("val") >= 2))
+    assert {r["id"] for r in t.read().collect()} == {"b", "c"}
+    assert _swap_leftovers(t.path, temp_before) == []
+    t.merge_upsert(spark.createDataFrame([("c", 30, "z")], SCHEMA), ["id"])
+    assert _swap_leftovers(t.path, temp_before) == []
+    t.append(spark.createDataFrame([("e", 5, "x")], SCHEMA))
+    assert t.compact(target_partitions=1) >= 2
+    assert _swap_leftovers(t.path, temp_before) == []
+    assert sorted(os.listdir(tmp_path)) == ["tbl"]
+    got = pq.read_table(t.path).to_pydict()
+    assert sorted(zip(got["id"], got["val"])) == [("b", 2), ("c", 30), ("e", 5)]
+
+
+def test_failed_overwrite_keeps_table_and_removes_stage(spark, make_table):
+    t = make_table(ParquetTable)
+    temp_before = _temp_copies()
+    bad = t.read().withColumn("val", F.raise_error(F.lit("boom")).cast("long"))
+    with pytest.raises(Exception, match="boom"):
+        t.overwrite(bad)
+    assert _swap_leftovers(t.path, temp_before) == []
+    assert {r["id"] for r in t.read().collect()} == {"a", "b", "c"}
+
+
+def test_merge_upsert_keeps_file_count(spark, tmp_path):
+    """Repeated single-row upserts on a one-file table leave one file
+    (the union with the update adds a partition each call), and the
+    last write per key wins."""
+    t = ParquetTable(spark, str(tmp_path / "one"), SCHEMA)
+    t.overwrite(
+        spark.createDataFrame([(f"k{i}", i, "x") for i in range(50)], SCHEMA).coalesce(1)
+    )
+    for i in range(10):
+        t.merge_upsert(spark.createDataFrame([("k1", i, f"v{i}")], SCHEMA), ["id"])
+    assert len(glob.glob(os.path.join(t.path, "*.parquet"))) == 1
+    rows = {r["id"]: (r["val"], r["tag"]) for r in t.read().collect()}
+    assert len(rows) == 50 and rows["k1"] == (9, "v9")
 
 
 @pytest.mark.parametrize("cls", [ParquetTable, VersionedParquetTable])
