@@ -8719,7 +8719,7 @@ def oracle_sql() -> dict[str, str]:
           AND canonical_url NOT IN (
             SELECT DISTINCT canonical_url FROM c WHERE doc_id % 5 > 0)
     """
-    d["extract_links"] = '''
+    d["extract_links"] = r'''
         WITH m AS (
           SELECT doc_id,
                  '<a href="http://' || source || '.com/p/'

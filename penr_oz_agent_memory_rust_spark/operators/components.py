@@ -3,26 +3,42 @@ closure step that turns pairwise dedup hits into clusters with one canonical
 representative (large-scale dedup pipelines always end here: A~B, B~C ⇒
 {A,B,C} keep min).
 
-Algorithm: two physical strategies behind one API —
+Algorithm: two physical strategies behind one API, chosen by the edge-count
+probe of `localdata._size_probed` —
 
-1. **Driver-local union-find** when the edge list is small (≤
-   `local_threshold` edges, measured by a count on the already-persisted
-   edge frame). After LSH banding the candidate-pair graph is orders of
-   magnitude smaller than the corpus (pairs only exist where signatures
-   collide), so at any scale the *closure* input is usually tiny even when
-   the corpus is 100 TB; a single collect + union-find beats several
-   shuffle rounds of scheduling overhead by a wide margin.
-2. **Iterative min-label propagation** otherwise (a bounded number of
-   join+aggregate rounds). Each round every node adopts the smallest label
-   in its neighborhood; converges in O(diameter) rounds — near-dup graphs
-   are unions of small cliques, so a handful of rounds suffices. Each
-   round is two shuffles (join + groupBy); no driver-side state beyond the
-   loop counter and an optional convergence check.
+1. **Driver-local union-find** when the edge list is small. After LSH
+   banding the candidate-pair graph is orders of magnitude smaller than the
+   corpus (pairs only exist where signatures collide), so at any scale the
+   *closure* input is usually tiny even when the corpus is 100 TB; a single
+   collect + union-find beats several shuffle rounds of scheduling overhead
+   by a wide margin.
+2. **Large-star/small-star** otherwise (Kiveris et al., "Connected
+   Components in MapReduce and Beyond", SoCC 2014). Edges are kept as
+   (child, parent) with child > parent. Large-star links every neighbor
+   above a node to the node's smallest neighbor-or-self; small-star links a
+   node and all its parents to the smallest of those parents. Both keep
+   connectivity and move every edge toward its component's minimum, and
+   the loop stops when the edges form a star forest: each child has one
+   parent and no parent is a child. Each parent is then its component's
+   minimum. O(log² n) rounds, where min-label propagation needs
+   O(diameter); each round is two window shuffles, one distinct and an
+   eager localCheckpoint (a persisted loop re-plans every earlier round).
+   A loop that reaches `MAX_ROUNDS` raises instead of returning partial
+   labels.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from collections import Counter
+
+from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import StructType
+
+from penr_oz_agent_memory_rust_spark.localdata import _size_probed
+
+# Cap on large-star/small-star rounds; read at call time. A 10k-node chain
+# converges in 14 rounds and a random 100k-node chain in 13.
+MAX_ROUNDS = 50
 
 
 def _local_union_find(edges) -> list:
@@ -52,157 +68,80 @@ def _local_union_find(edges) -> list:
     return sorted((node, rep[find(node)]) for node in parent)
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    max_iterations: int = 10,
-    check_convergence: bool = True,
-    local_threshold: int = 2_000_000,
-) -> DataFrame:
+def _star_components(src: DataFrame) -> DataFrame:
+    """Large-star/small-star over (u, v) edges; returns the checkpointed
+    (node, component) frame. Raises once `MAX_ROUNDS` rounds have run
+    without reaching a star forest."""
+    cap = MAX_ROUNDS
+    u, v, m = F.col("u"), F.col("v"), F.col("m")
+    by_u = Window.partitionBy("u")
+    e = src.filter(u != v).select(F.greatest(u, v).alias("u"), F.least(u, v).alias("v"))
+    for _ in range(cap):
+        # large-star; the minimum is over all of u's neighbors, so the
+        # filter to the neighbors above u comes after the window
+        both = e.unionByName(e.select(v.alias("u"), u.alias("v")))
+        large = (
+            both.withColumn("m", F.least(u, F.min(v).over(by_u)))
+            .filter(v > u)
+            .select(v.alias("u"), m.alias("v"))
+        )
+        # small-star: u and each of its parents link to its smallest parent
+        small = large.withColumn("m", F.min(v).over(by_u)).select(
+            F.explode(F.array(F.struct(v.alias("u"), m.alias("v")), F.struct(u, m.alias("v"))))
+        )
+        e = small.select("col.*").filter(u != v).distinct().localCheckpoint(eager=True)
+        # star forest: a child with a second edge has two parents or is a
+        # parent too
+        roles = e.select(u.alias("n"), F.lit(1).alias("child")).unionByName(
+            e.select(v.alias("n"), F.lit(0).alias("child"))
+        )
+        per_node = roles.groupBy("n").agg(F.count("*").alias("k"), F.max("child").alias("child"))
+        if per_node.filter("child = 1 AND k > 1").isEmpty():
+            break
+    else:
+        raise RuntimeError(f"connected_components did not converge within MAX_ROUNDS={cap} rounds")
+    nodes = src.select(u.alias("node")).union(src.select(v.alias("node"))).distinct()
+    return (
+        nodes.join(e.withColumnRenamed("u", "node"), "node", "left")
+        .select("node", F.coalesce(v, F.col("node")).alias("component"))
+        .localCheckpoint(eager=True)
+    )
+
+
+def _edges(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    return pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+
+
+def connected_components(pairs: DataFrame, a_col: str = "a", b_col: str = "b") -> DataFrame:
     """Input: undirected edges (a, b). Output: (node, component) where
     component is the minimum node id reachable from `node`.
 
     Nodes appearing in no edge are absent (callers union isolated nodes
-    back as their own component if needed).
-
-    `local_threshold`: if the (distinct-ignored) edge count is at or below
-    this, the closure runs as driver-side union-find on the collected
-    edges (~50 B/edge driver memory; the default ≈100 MB). Set to 0 to
-    force the distributed path.
-    """
-    src = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    if local_threshold > 0:
-        # size probe and data fetch in ONE evaluation of the (typically
-        # expensive) pairs pipeline: collect at most threshold+1 edges; if
-        # the limit wasn't hit we already hold the whole edge list.
-        # persist FIRST so an overflowing probe leaves the partitions it
-        # computed cached for the distributed path instead of throwing the
-        # whole evaluation away
-        src = src.persist()
-        probe = src.limit(local_threshold + 1).collect()
-        if len(probe) <= local_threshold:
-            src.unpersist()
-            rows = _local_union_find((r["u"], r["v"]) for r in probe)
-            from pyspark.sql.types import StructField, StructType
-
-            node_type = pairs.schema[a_col].dataType
-            out_schema = StructType(
-                [
-                    StructField("node", node_type, True),
-                    StructField("component", node_type, True),
-                ]
-            )
-            from penr_oz_agent_memory_rust_spark.localdata import local_df
-
-            # coalesce(1): a few-hundred-row result split across the default
-            # parallelism makes every downstream stage pay 32 tasks of
-            # scheduling for nothing
-            out = local_df(pairs.sparkSession, rows, out_schema).coalesce(1)
-            # side-channel for dedup_clusters: the rows are already on the
-            # driver, so cluster sizes can be counted without a shuffle
-            out._spark_graft_local_components = rows
-            return out
-    # both orientations from ONE scan of `src` (an explode, not a union of
-    # two branches, which would recompute the input twice)
-    edges = (
-        src.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("u"), F.col("v")),
-                    F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .distinct()
+    back as their own component if needed)."""
+    node_type = pairs.schema[a_col].dataType
+    return _size_probed(
+        _edges(pairs, a_col, b_col),
+        _local_union_find,
+        StructType().add("node", node_type).add("component", node_type),
+        _star_components,
     )
-    # self-edges make every node its own neighbor so labels persist
-    nodes = edges.select("u").distinct()
-    edges = edges.unionByName(nodes.select("u", F.col("u").alias("v"))).persist()
-    labels = nodes.select("u", F.col("u").alias("component")).persist()
-    numeric_ids = labels.schema["component"].dataType.typeName() in (
-        "byte", "short", "integer", "long", "float", "double", "decimal"
-    )
-    prev_sum = None
-    try:
-        for _ in range(max_iterations):
-            # each node adopts the min label among its neighbors' labels;
-            # persist each round or the lineage (and recompute cost) grows
-            # with every iteration — the classic iterative-join trap
-            new_labels = (
-                edges.join(labels.withColumnRenamed("u", "v"), "v")
-                .groupBy("u")
-                .agg(F.min("component").alias("component"))
-                .persist()
-            )
-            if check_convergence and numeric_ids:
-                # self-edges guarantee labels are non-increasing, so the label
-                # sum strictly decreases until the fixpoint: one tiny aggregate
-                # per round instead of a join-based changed-rows check
-                cur_sum = new_labels.agg(F.sum("component")).first()[0]
-                labels.unpersist()
-                labels = new_labels
-                if cur_sum == prev_sum:
-                    break
-                prev_sum = cur_sum
-            elif check_convergence:
-                changed = (
-                    new_labels.alias("n")
-                    .join(labels.alias("o"), "u")
-                    .filter(F.col("n.component") != F.col("o.component"))
-                    .limit(1)
-                    .count()
-                )
-                labels.unpersist()
-                labels = new_labels
-                if changed == 0:
-                    break
-            else:
-                labels.unpersist()
-                labels = new_labels
-        # materialize the final frame so callers are not affected by the
-        # persisted-lineage cleanup below
-        return labels.select(F.col("u").alias("node"), "component").localCheckpoint(eager=True)
-    finally:
-        edges.unpersist()
-        labels.unpersist()
-        if local_threshold > 0:
-            src.unpersist()
 
 
-def dedup_clusters(
-    pairs: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    max_iterations: int = 10,
-    local_threshold: int = 2_000_000,
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame, a_col: str = "a", b_col: str = "b") -> DataFrame:
     """Cluster summary: (component, cluster_size) with component = the
-    canonical (minimum) member — the keep-list's complement."""
-    comp = connected_components(
-        pairs, a_col, b_col, max_iterations, local_threshold=local_threshold
+    canonical (minimum) member — the keep-list's complement. On the local
+    path the sizes are counted on the driver too, instead of shuffling a
+    few hundred rows."""
+    return _size_probed(
+        _edges(pairs, a_col, b_col),
+        lambda rows: sorted(Counter(c for _, c in _local_union_find(rows)).items()),
+        StructType()
+        .add("component", pairs.schema[a_col].dataType)
+        .add("cluster_size", "long", False),
+        lambda e: _star_components(e)
+        .groupBy("component")
+        .agg(F.count("*").alias("cluster_size")),
     )
-    local_rows = getattr(comp, "_spark_graft_local_components", None)
-    if local_rows is not None:
-        # closure already ran on the driver — finish the tiny aggregation
-        # there too instead of shuffling a few hundred rows across 32 tasks
-        from collections import Counter
-
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        sizes = Counter(component for _, component in local_rows)
-        node_type = comp.schema["component"].dataType
-        out_schema = StructType(
-            [
-                StructField("component", node_type, True),
-                StructField("cluster_size", LongType(), False),
-            ]
-        )
-        from penr_oz_agent_memory_rust_spark.localdata import local_df
-
-        return local_df(pairs.sparkSession, sorted(sizes.items()), out_schema).coalesce(1)
-    return comp.groupBy("component").agg(F.count("*").alias("cluster_size"))
 
 
 def leakage_safe_split(
@@ -213,7 +152,6 @@ def leakage_safe_split(
     salt: str = "split",
     a_col: str = "a",
     b_col: str = "b",
-    max_iterations: int = 10,
 ) -> DataFrame:
     """★ leakage-safe train/heldout split: assign each document by the
     portable hash of its near-dup COMPONENT representative, so a document
@@ -223,14 +161,14 @@ def leakage_safe_split(
     their own singleton component. Output: (id, rep, split).
 
     Scale shape: connected components over the candidate pairs (size-probed
-    driver union-find or distributed min-label propagation), one left join
+    driver union-find or distributed large-star/small-star), one left join
     of the corpus ids against the node->component map (components only
     exist for docs IN pairs — the map is far smaller than the corpus), and
     a pure-expression md5 bucket. Deterministic and engine-portable, hence
     oracle-checkable."""
     from penr_oz_agent_memory_rust_spark.functions import hashing
 
-    comp = connected_components(pairs, a_col, b_col, max_iterations).withColumnRenamed(
+    comp = connected_components(pairs, a_col, b_col).withColumnRenamed(
         "node", id_col
     )
     rep = F.coalesce(F.col("component"), F.col(id_col))
@@ -258,7 +196,6 @@ def leakage_safe_kfold(
     salt: str = "kfold",
     a_col: str = "a",
     b_col: str = "b",
-    max_iterations: int = 10,
 ) -> DataFrame:
     """★ leakage-safe k-fold assignment: fold = portable-md5(salt|component
     representative) mod k, so a document and ALL its near-duplicates share
@@ -271,7 +208,7 @@ def leakage_safe_kfold(
         raise ValueError(f"k must be >= 2, got {k}")
     from penr_oz_agent_memory_rust_spark.functions import hashing
 
-    comp = connected_components(pairs, a_col, b_col, max_iterations).withColumnRenamed(
+    comp = connected_components(pairs, a_col, b_col).withColumnRenamed(
         "node", id_col
     )
     rep = F.coalesce(F.col("component"), F.col(id_col))

@@ -1248,7 +1248,6 @@ def ngram_jaccard_verify(
     unit: str = "word",
     a_col: str = "a",
     b_col: str = "b",
-    materialize_pairs: bool = True,
 ) -> DataFrame:
     """★ exact n-gram Jaccard for a GIVEN candidate pair list — the dedup
     funnel's verify tier as a composable operator:
@@ -1279,11 +1278,8 @@ def ngram_jaccard_verify(
     collapses the plan to three small-frame joins; the pair-doc shingle
     frame stays lazy (its two probe-side evaluations overlap as
     concurrent AQE stages, and a barrier there measured slower —
-    r10 A/B). `materialize_pairs=False` keeps the old fully-lazy shape
-    for callers whose pair pipeline is cheap."""
-    pairs = pairs.select(F.col(a_col), F.col(b_col))
-    if materialize_pairs:
-        pairs = pairs.localCheckpoint(eager=True)
+    r10 A/B)."""
+    pairs = pairs.select(F.col(a_col), F.col(b_col)).localCheckpoint(eager=True)
     ids = (
         pairs.select(F.col(a_col).alias(id_col))
         .unionByName(pairs.select(F.col(b_col).alias(id_col)))
@@ -2248,15 +2244,14 @@ def curate_funnel(
             max_bucket=max_bucket,
         )
     kept = est.filter(F.col("est_jaccard") >= est_threshold).select("a", "b")
-    # materialize_pairs: the r10 A/B (9.24 vs 8.79 s) had the lazy kept
-    # list winning in-funnel, because the replayed est tail overlapped on
-    # idle cores while a barrier serialized. After the r11 sig Arrow pass
-    # + strip+sign fusion the balance INVERTED — the est tail is now the
-    # dominant remaining plan, and verify replays it 3× (a-ids, b-ids,
-    # final join) plus the components probe. Re-run interleaved A/B
-    # (min-of-4 / means): kept checkpointed 7.06/9.6 s, lazy 9.56/13.1 s,
-    # verified-checkpoint variants in between — so the funnel now uses
-    # the verify tier's DEFAULT eager pair materialization.
+    # verify checkpoints `kept` eagerly: the r10 A/B (9.24 vs 8.79 s) had
+    # the lazy kept list winning in-funnel, because the replayed est tail
+    # overlapped on idle cores while a barrier serialized. After the r11
+    # sig Arrow pass + strip+sign fusion the balance INVERTED — the est
+    # tail is now the dominant remaining plan, and verify would replay it
+    # 3× (a-ids, b-ids, final join) plus the components probe. Re-run
+    # interleaved A/B (min-of-4 / means): kept checkpointed 7.06/9.6 s,
+    # lazy 9.56/13.1 s, verified-checkpoint variants in between.
     verified = ngram_jaccard_verify(
         survivors, kept, id_col=id_col, text_col=text_col, threshold=jaccard,
     )

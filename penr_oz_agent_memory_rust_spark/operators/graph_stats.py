@@ -25,6 +25,9 @@ degree order — identical per-node results either way.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import StructType
+
+from penr_oz_agent_memory_rust_spark.localdata import _size_probed
 
 
 def undirected_edges(
@@ -72,17 +75,15 @@ def triangle_stats(
     src_col: str = "src",
     dst_col: str = "dst",
     round_dp: int = 6,
-    local_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Per-node (id, degree, triangles, clustering) over the undirected
     version of `edges`. clustering = 2*T / (d*(d-1)) for d >= 2, else 0.
 
-    `local_threshold` (r10): at or below this many distinct undirected
-    edges the whole computation runs driver-locally (the size-probed
-    strategy split of connected_components/kcore/pagerank/label_prop;
-    equality pinned in tests/test_graph_stats.py). Counts are integers
-    and the clustering arithmetic is replicated op-for-op, so the local
-    values are bit-identical. Set 0 to force the distributed plan.
+    Small graphs run driver-locally (`localdata._size_probed`, probed on
+    the distinct undirected edges; equality pinned in
+    tests/test_graph_stats.py). Counts are integers and the clustering
+    arithmetic is replicated op-for-op, so the local values are
+    bit-identical.
 
     Degree-ordered enumeration: orient each edge (a,b) as u -> v where
     (deg(u), u) < (deg(v), v); wedges (u,v),(u,w) with (deg(v),v) <
@@ -90,31 +91,19 @@ def triangle_stats(
     (v,w). The closure join is on the edge key itself, so AQE can handle
     residual skew; no node ranks are materialized (no global window).
     """
-    und = undirected_edges(edges, src_col, dst_col).persist()
-    if local_threshold > 0:
-        probe = und.limit(local_threshold + 1).collect()
-        if len(probe) <= local_threshold:
-            und.unpersist()
-            rows = _local_triangle_stats([(r["a"], r["b"]) for r in probe], round_dp)
-            from pyspark.sql.types import (
-                DoubleType,
-                LongType,
-                StructField,
-                StructType,
-            )
+    return _size_probed(
+        undirected_edges(edges, src_col, dst_col),
+        lambda rows: _local_triangle_stats(rows, round_dp),
+        StructType()
+        .add("id", edges.schema[src_col].dataType)
+        .add("degree", "long")
+        .add("triangles", "long")
+        .add("clustering", "double"),
+        lambda und: _distributed_triangle_stats(und, round_dp),
+    )
 
-            from penr_oz_agent_memory_rust_spark.localdata import local_df
 
-            id_type = edges.schema[src_col].dataType
-            schema = StructType(
-                [
-                    StructField("id", id_type, True),
-                    StructField("degree", LongType(), True),
-                    StructField("triangles", LongType(), True),
-                    StructField("clustering", DoubleType(), True),
-                ]
-            )
-            return local_df(edges.sparkSession, rows, schema).coalesce(1)
+def _distributed_triangle_stats(und: DataFrame, round_dp: int) -> DataFrame:
     deg = (
         und.select(F.col("a").alias("id"))
         .unionByName(und.select(F.col("b").alias("id")))
@@ -168,7 +157,7 @@ def triangle_stats(
         )
         .localCheckpoint(eager=True)
     )
-    for df in (oriented, deg, und):
+    for df in (oriented, deg):
         df.unpersist()
     return out
 
@@ -277,7 +266,6 @@ def kcore(
     max_iters: int = 20,
     src_col: str = "src",
     dst_col: str = "dst",
-    local_threshold: int = 2_000_000,
 ) -> DataFrame:
     """★ k-core decomposition: iteratively peel nodes of degree < k until
     fixpoint — the standard dense-community extractor (a node in the
@@ -294,50 +282,34 @@ def kcore(
     happens earlier — which makes the operator oracle-mirrorable by a
     fixed CTE unroll. Returns (id, degree) for the surviving core.
 
-    `local_threshold` (r10): at or below this many symmetrized edges the
-    peel runs as a driver-local loop over the collected edge list — the
-    same size-probed strategy split connected_components has carried
-    since r5, for the same reason: each distributed peel is a
-    checkpoint-barrier + count job (the r10 profile counted 76 jobs for
-    a 9-round peel at sf0.1, nearly all scheduling), while the candidate
-    graph after thresholding is orders of magnitude smaller than the
-    corpus at any scale. The distributed loop below is the >threshold
-    path, unchanged. Both paths run the identical synchronous rounds
-    (equality pinned in tests/test_graph_stats.py). Set 0 to force
-    distributed.
+    Small graphs run the peel as a driver-local loop over the collected
+    symmetrized edges (`localdata._size_probed`; the r10 profile counted
+    76 jobs for a distributed 9-round peel at sf0.1, nearly all
+    scheduling). Both paths run the identical synchronous rounds
+    (equality pinned in tests/test_graph_stats.py).
     """
-    # eager localCheckpoint per round, NOT persist: each peel references
-    # the previous edge frame three times (degree agg + two semi-joins),
-    # so the un-cut logical plan grows 3^rounds — 12 peels OOM'd the
-    # driver on plan STRINGS alone. Checkpointing materializes the edge
-    # frame and truncates lineage, the same pattern as label_prop /
-    # pagerank / deepwalk.
     sym = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .union(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    if local_threshold > 0:
-        # probe and fetch in ONE evaluation (the connected_components
-        # pattern): persist first so an overflowing probe leaves the
-        # partitions cached for the distributed path
-        sym = sym.persist()
-        probe = sym.limit(local_threshold + 1).collect()
-        if len(probe) <= local_threshold:
-            sym.unpersist()
-            rows = _local_kcore([(r["src"], r["dst"]) for r in probe], k, max_iters)
-            from pyspark.sql.types import LongType, StructField, StructType
+    return _size_probed(
+        sym,
+        lambda rows: _local_kcore(rows, k, max_iters),
+        StructType().add("id", edges.schema[src_col].dataType).add("degree", "long"),
+        lambda e: _distributed_kcore(e, k, max_iters),
+    )
 
-            from penr_oz_agent_memory_rust_spark.localdata import local_df
 
-            id_type = edges.schema[src_col].dataType
-            schema = StructType(
-                [StructField("id", id_type, True), StructField("degree", LongType(), True)]
-            )
-            return local_df(edges.sparkSession, rows, schema).coalesce(1)
+def _distributed_kcore(sym: DataFrame, k: int, max_iters: int) -> DataFrame:
+    # eager localCheckpoint per round, NOT persist: each peel references
+    # the previous edge frame three times (degree agg + two semi-joins),
+    # so the un-cut logical plan grows 3^rounds — 12 peels OOM'd the
+    # driver on plan STRINGS alone. Checkpointing materializes the edge
+    # frame and truncates lineage, the same pattern as label_prop /
+    # pagerank / deepwalk.
     cur = sym.localCheckpoint(eager=True)
-    sym.unpersist()  # no-op unless the probe overflowed above
     # fixpoint on the EDGE count, not a per-round distinct-node count: a
     # peeled node always had >= 1 edge (degree-0 nodes never appear in an
     # edge list), so the edge count is stable iff the survivor set is —

@@ -38,6 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from penr_oz_agent_memory_rust_spark.functions import similarity
+from penr_oz_agent_memory_rust_spark.localdata import local_df
 from penr_oz_agent_memory_rust_spark.operators.topk import top_k_per_group
 
 
@@ -199,7 +200,7 @@ def arrow_all_pairs_cosine_f64(
         )
     out_schema = f"{query_id} {id_type}, {corpus_id} {id_type}, score double"
     if not q_rows:
-        return corpus.sparkSession.createDataFrame([], out_schema)
+        return local_df(corpus.sparkSession, [], out_schema)
 
     def _seq_dot(m: np.ndarray, other: np.ndarray) -> np.ndarray:
         # rows of m · rows of other, sequential-fold order over dims

@@ -22,12 +22,15 @@ is cut by an EAGER localCheckpoint of the node-sized label frame every
 iteration — stricter than pagerank.py's every-few-iterations discipline
 because the label frame is consumed twice per iteration, which doubles
 the analyzed plan per iteration unless a barrier flattens it (see the
-comment in label_propagation).
+comment in _distributed_label_prop).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
+
+from penr_oz_agent_memory_rust_spark.localdata import _size_probed
 
 
 def _local_label_prop(edge_rows, seed_rows, iters: int) -> list:
@@ -74,7 +77,6 @@ def label_propagation(
     dst_col: str = "dst",
     id_col: str = "id",
     label_col: str = "label",
-    local_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Propagate integer labels from `seeds` (id, label) over the
     undirected graph given by `edges`. Returns (id, label) for every node
@@ -89,43 +91,30 @@ def label_propagation(
     because at scale that is a second full edge shuffle the caller may
     not want to pay.
 
-    `local_threshold` (r10): at or below this many input edges the
-    propagation runs as a driver-local loop over the collected edge +
-    seed lists — the connected_components/kcore size-probed strategy
-    split, for the same reason (each distributed iteration is a
-    checkpoint barrier + several AQE jobs; the r10 profile counted 34
-    jobs for 3 iterations on a 2.5k-edge gate graph). Votes, clamping,
-    tie-breaks and the keep-previous fallback are the identical
+    Small graphs run as a driver-local loop over the collected edge and
+    seed lists (`localdata._size_probed`; the r10 profile counted 34 jobs
+    for 3 distributed iterations on a 2.5k-edge gate graph). Votes,
+    clamping, tie-breaks and the keep-previous fallback are the identical
     synchronous rounds (equality pinned in tests/test_label_prop.py);
-    labels are integers, so there is no float-order concern. Set 0 to
-    force the distributed loop (the >threshold path, unchanged)."""
-    if local_threshold > 0:
-        src0 = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).persist()
-        probe = src0.limit(local_threshold + 1).collect()
-        if len(probe) <= local_threshold:
-            src0.unpersist()
-            seed_rows = [
-                (r[0], r[1])
-                for r in seeds.select(id_col, F.col(label_col).cast("bigint")).collect()
-            ]
-            rows = _local_label_prop([(r["src"], r["dst"]) for r in probe], seed_rows, iters)
-            from pyspark.sql.types import LongType, StructField, StructType
+    labels are integers, so there is no float-order concern."""
 
-            from penr_oz_agent_memory_rust_spark.localdata import local_df
+    def local(rows):
+        seed_rows = seeds.select(id_col, F.col(label_col).cast("bigint")).collect()
+        return _local_label_prop(rows, seed_rows, iters)
 
-            id_type = edges.schema[src_col].dataType
-            schema = StructType(
-                [StructField("id", id_type, True), StructField("label", LongType(), True)]
-            )
-            return local_df(edges.sparkSession, rows, schema).coalesce(1)
-        src0.unpersist()  # overflow: fall through to the distributed loop
+    return _size_probed(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
+        local,
+        StructType().add("id", edges.schema[src_col].dataType).add("label", "long"),
+        lambda e: _distributed_label_prop(e, seeds, iters, id_col, label_col),
+    )
+
+
+def _distributed_label_prop(
+    edges: DataFrame, seeds: DataFrame, iters: int, id_col: str, label_col: str
+) -> DataFrame:
     bidir = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .unionByName(
-            edges.select(
-                F.col(dst_col).alias("src"), F.col(src_col).alias("dst")
-            )
-        )
+        edges.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .repartition("src")
         .persist()
     )

@@ -61,7 +61,6 @@ def search(
     session: str | None = None,
     metric: str = "cosine",
     precision: str = "f32",
-    strategy: str = "expr",
 ) -> DataFrame:
     """§3.1 core query: filter -> score -> drop-null -> top-k -> project.
 
@@ -70,52 +69,13 @@ def search(
     Spark's `col == lit` null semantics match exactly). Dim-mismatched and
     zero-norm embeddings score NULL and are dropped (P2, src/memory.rs:150-161).
 
-    Two physical strategies for the same logical query (both f32, both rank
-    identically up to f32 ulps):
-      'expr'    — native column kernel inside the scan stage; best when the
-                  filter/pruning does the heavy lifting.
-      'blocked' — Arrow-batched BLAS scoring per partition emitting local
-                  top-k (knn.blocked_knn_join with one query row); best for
-                  wide scans of huge corpora where Python-side matmul beats
-                  the interpreted fold.
+    Scores with the native column kernel inside the scan stage.
     """
     if not query_vec:
         raise ValidationError("query embedding must be non-empty")
     df = memories
     if session is not None:
         df = df.filter(F.col("session") == session)
-    if strategy == "blocked" and any(float(x) != 0.0 for x in query_vec):
-        from penr_oz_agent_memory_rust_spark.operators.knn import blocked_knn_join
-
-        dim = len(query_vec)
-        # P2 parity: drop dim-mismatched and zero-norm rows up front (the
-        # expr path drops them via NULL scores)
-        comparable = df.filter(F.size("embedding") == dim).filter(
-            F.exists("embedding", lambda x: x != 0)
-        )
-        from penr_oz_agent_memory_rust_spark.localdata import local_df
-
-        qdf = local_df(
-            memories.sparkSession,
-            [("q", [float(x) for x in query_vec])],
-            "query_id string, qvec array<float>",
-        )
-        hits = blocked_knn_join(
-            qdf,
-            comparable.select(F.col("id"), F.col("embedding").alias("vec")),
-            k=limit,
-            metric=metric,
-            query_id="query_id",
-            corpus_id="id",
-            query_vec="qvec",
-            corpus_vec="vec",
-            id_type="string",
-        ).select("id", F.col("score").cast("float").alias("score"))
-        return (
-            hits.join(df.drop("score"), "id")
-            .orderBy(F.col("score").desc(), F.col("id"))
-            .select(*RESULT_COLS)
-        )
     q = similarity.query_vec_lit(query_vec, precision)
     scored = df.withColumn("score", similarity.score_expr(metric, F.col("embedding"), q, precision))
     scored = scored.filter(F.col("score").isNotNull())

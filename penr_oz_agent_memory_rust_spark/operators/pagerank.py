@@ -19,6 +19,9 @@ is oracle-checkable by unrolling the same iterations in SQL.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
+
+from penr_oz_agent_memory_rust_spark.localdata import _size_probed
 
 
 def _round_half_up(x: float, dp: int) -> float:
@@ -75,7 +78,6 @@ def pagerank(
     damping: float = 0.85,
     round_dp: int = 12,
     checkpoint_every: int = 8,
-    local_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Power-iteration PageRank on a directed edge list. Returns
     (id, rank) for every node appearing as src or dst, rank rounded to
@@ -88,39 +90,25 @@ def pagerank(
     out-edges) contribute nothing, matching the classic simplified
     formulation; every node still receives the (1-d)/N teleport mass.
 
-    `local_threshold` (r10): at or below this many edges the power
-    iteration runs driver-locally over the collected edge list — the
-    connected_components/kcore size-probed strategy split (each
-    distributed iteration costs several AQE jobs; the r10 profile counted
-    24 jobs for 3 iterations on the 2.5k-edge gate graph). Same
+    Small graphs run the power iteration driver-locally over the collected
+    edge list (`localdata._size_probed`; the r10 profile counted 24 jobs
+    for 3 distributed iterations on the 2.5k-edge gate graph). Same
     formulation, same per-iteration HALF_UP rounding; f64 sum-order
     differences sit ~4 orders of magnitude below the rounding grain
-    (equality pinned in tests/test_pagerank.py). Set 0 to force the
-    distributed loop (unchanged below).
+    (equality pinned in tests/test_pagerank.py).
     """
-    if local_threshold > 0:
-        src0 = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).persist()
-        probe = src0.limit(local_threshold + 1).collect()
-        if len(probe) <= local_threshold:
-            src0.unpersist()
-            rows = _local_pagerank(
-                [(r["src"], r["dst"]) for r in probe], iters, damping, round_dp
-            )
-            from pyspark.sql.types import DoubleType, StructField, StructType
-
-            from penr_oz_agent_memory_rust_spark.localdata import local_df
-
-            id_type = edges.schema[src_col].dataType
-            schema = StructType(
-                [StructField("id", id_type, True), StructField("rank", DoubleType(), True)]
-            )
-            return local_df(edges.sparkSession, rows, schema).coalesce(1)
-        src0.unpersist()  # overflow: fall through to the distributed loop
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .repartition("src")
-        .persist()
+    return _size_probed(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
+        lambda rows: _local_pagerank(rows, iters, damping, round_dp),
+        StructType().add("id", edges.schema[src_col].dataType).add("rank", "double"),
+        lambda e: _distributed_pagerank(e, iters, damping, round_dp, checkpoint_every),
     )
+
+
+def _distributed_pagerank(
+    edges: DataFrame, iters: int, damping: float, round_dp: int, checkpoint_every: int
+) -> DataFrame:
+    e = edges.repartition("src").persist()
     nodes = (
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))

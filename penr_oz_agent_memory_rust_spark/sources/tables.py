@@ -21,6 +21,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from penr_oz_agent_memory_rust_spark.localdata import local_df
+
 
 def testdata_path(sf_dir: str, table: str) -> str:
     return os.path.join(sf_dir, f"{table}.parquet")
@@ -139,7 +141,7 @@ class ParquetTable:
         """CREATE TABLE IF NOT EXISTS semantics (reference
         src/vector_store.rs:112-200 ensure_collection)."""
         if not self.exists():
-            empty = self.spark.createDataFrame([], self.schema)
+            empty = local_df(self.spark, [], self.schema)
             self._writer(empty, "overwrite").parquet(self.path)
 
     def read(self) -> DataFrame:

@@ -47,6 +47,8 @@ from contextlib import suppress as contextlib_suppress
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from penr_oz_agent_memory_rust_spark.localdata import local_df
+
 
 class ConcurrentWriteError(RuntimeError):
     """Another commit landed after this operation's base snapshot."""
@@ -457,7 +459,7 @@ class VersionedParquetTable:
         v = self.current_version() if version is None else version
         sch = self._schema_at(v)
         if not keep:
-            return self.spark.createDataFrame([], sch)
+            return local_df(self.spark, [], sch)
         return (
             self.spark.read.schema(sch)
             .parquet(*[os.path.join(self.path, f) for f in keep])
@@ -517,7 +519,7 @@ class VersionedParquetTable:
         sch = self._schema_at(v)
         files = self._load_manifest(v)["files"]
         if not files:
-            return self.spark.createDataFrame([], sch)
+            return local_df(self.spark, [], sch)
         # files written before a later add_columns lack the new fields;
         # reading them under the version's schema yields nulls there
         return (
@@ -559,7 +561,7 @@ class VersionedParquetTable:
         v = self.current_version() if version is None else version
         sch = self._schema_at(v)
         if not keep:
-            return self.spark.createDataFrame([], sch)
+            return local_df(self.spark, [], sch)
         return (
             self.spark.read.schema(sch)
             .parquet(*[os.path.join(self.path, f) for f in keep])
@@ -1004,7 +1006,7 @@ class VersionedParquetTable:
         if f0 <= f1:
             added = sorted(f1 - f0)
             if not added:
-                return self.spark.createDataFrame([], sch1).withColumn(
+                return local_df(self.spark, [], sch1).withColumn(
                     "_change_type", ins_type
                 )
             return (

@@ -2177,6 +2177,7 @@ def core_scaling_probe() -> None:
     import shutil
     import tempfile
 
+    from penr_oz_agent_memory_rust_spark import localdata
     from penr_oz_agent_memory_rust_spark.operators import (
         importance,
         text_ops,
@@ -2207,7 +2208,7 @@ def core_scaling_probe() -> None:
     docs = spark.read.parquet(f"{root}/docs")
     # deterministic sparse graph: ~6 undirected edges per node over
     # n_docs/3 nodes — big enough that the DISTRIBUTED arms
-    # (local_threshold=0) run real per-iteration joins
+    # (localdata.LOCAL_EDGE_LIMIT = 0) run real per-iteration joins
     n_nodes = max(1000, n_docs // 3)
     spark.range(n_nodes).select(
         F.explode(
@@ -2226,6 +2227,15 @@ def core_scaling_probe() -> None:
     only = {
         s for s in os.environ.get("SCALE_CORE_OPS", "").split(",") if s
     }
+
+    def distributed(op, *args, **kwargs):
+        # the size probe runs at call time, so the limit only needs to
+        # hold for the call
+        saved, localdata.LOCAL_EDGE_LIMIT = localdata.LOCAL_EDGE_LIMIT, 0
+        try:
+            return op(*args, **kwargs)
+        finally:
+            localdata.LOCAL_EDGE_LIMIT = saved
 
     def run(name, fn):
         if only and name not in only:
@@ -2277,26 +2287,26 @@ def core_scaling_probe() -> None:
     )
     run(
         "kcore_distributed",
-        lambda: kcore(edges, k=3, max_iters=6, local_threshold=0),
+        lambda: distributed(kcore, edges, k=3, max_iters=6),
     )
     run(
         "pagerank_distributed",
-        lambda: pagerank(edges, iters=3, local_threshold=0),
+        lambda: distributed(pagerank, edges, iters=3),
     )
     run(
         "label_prop_distributed",
-        lambda: label_propagation(
+        lambda: distributed(
+            label_propagation,
             edges,
             spark.range(0, n_nodes, 10).select(
                 F.col("id"), F.pmod(F.col("id"), F.lit(7)).alias("label")
             ),
             iters=3,
-            local_threshold=0,
         ),
     )
     run(
         "triangles_distributed",
-        lambda: triangle_stats(edges, local_threshold=0),
+        lambda: distributed(triangle_stats, edges),
     )
     print(json.dumps(report))
     shutil.rmtree(root, ignore_errors=True)

@@ -7,6 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from penr_oz_agent_memory_rust_spark import localdata
 from penr_oz_agent_memory_rust_spark.operators import bm25, components
 
 
@@ -62,52 +63,82 @@ def test_rrf_fusion_prefers_doubly_ranked(spark):
 
 
 # lt=default exercises the driver-local union-find strategy; lt=0 forces the
-# distributed min-label-propagation loop — same answers from both.
+# distributed large-star/small-star loop — same answers from both.
 LT_BOTH_PATHS = [2_000_000, 0]
 
 
+@pytest.fixture()
+def edge_limit(monkeypatch):
+    """Set the graph operators' local edge limit for one test."""
+    return lambda n: monkeypatch.setattr(localdata, "LOCAL_EDGE_LIMIT", n)
+
+
+def _chain(spark, n):
+    return spark.createDataFrame([(i, i + 1) for i in range(n)], "a bigint, b bigint")
+
+
 @pytest.mark.parametrize("lt", LT_BOTH_PATHS)
-def test_connected_components_transitive(spark, lt):
+def test_connected_components_transitive(spark, edge_limit, lt):
+    edge_limit(lt)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (9, 1)], "a bigint, b bigint"
     )
     comp = {
         r["node"]: r["component"]
-        for r in components.connected_components(pairs, local_threshold=lt).collect()
+        for r in components.connected_components(pairs).collect()
     }
     assert comp[1] == comp[2] == comp[3] == comp[9] == 1
     assert comp[5] == comp[6] == 5
     sizes = {
         r["component"]: r["cluster_size"]
-        for r in components.dedup_clusters(pairs, local_threshold=lt).collect()
+        for r in components.dedup_clusters(pairs).collect()
     }
     assert sizes == {1: 4, 5: 2}
 
 
 @pytest.mark.parametrize("lt", LT_BOTH_PATHS)
-def test_connected_components_chain_diameter(spark, lt):
-    """A long chain needs several propagation rounds — convergence check
-    must carry the min label end to end."""
+def test_connected_components_chain_diameter(spark, edge_limit, lt):
+    """A long chain needs several rounds — the loop must carry the min
+    label end to end."""
+    edge_limit(lt)
     n = 12
-    pairs = spark.createDataFrame([(i, i + 1) for i in range(n)], "a bigint, b bigint")
     comp = {
         r["node"]: r["component"]
-        for r in components.connected_components(
-            pairs, max_iterations=20, local_threshold=lt
-        ).collect()
+        for r in components.connected_components(_chain(spark, n)).collect()
     }
     assert set(comp.values()) == {0}
     assert len(comp) == n + 1
 
 
+def test_connected_components_round_cap_raises(spark, edge_limit, monkeypatch):
+    """A loop that runs out of rounds raises and names the cap; it never
+    returns partial labels (the 13-node chain needs 4 rounds)."""
+    edge_limit(0)
+    monkeypatch.setattr(components, "MAX_ROUNDS", 2)
+    with pytest.raises(RuntimeError, match="MAX_ROUNDS=2"):
+        components.connected_components(_chain(spark, 12))
+
+
+def test_connected_components_long_chain_one_component(spark, edge_limit):
+    """A 200-node chain (diameter 199) is one component under the default
+    round cap on the distributed path."""
+    edge_limit(0)
+    comp = {
+        r["node"]: r["component"]
+        for r in components.connected_components(_chain(spark, 199)).collect()
+    }
+    assert len(comp) == 200
+    assert set(comp.values()) == {0}
+
+
 @pytest.mark.parametrize("lt", LT_BOTH_PATHS)
-def test_connected_components_string_ids(spark, lt):
-    """Non-numeric node ids work on both paths (distributed: the join-based
-    convergence fallback — the sum-of-labels shortcut is numeric-only)."""
+def test_connected_components_string_ids(spark, edge_limit, lt):
+    """Non-numeric node ids work on both paths."""
+    edge_limit(lt)
     pairs = spark.createDataFrame([("a", "b"), ("b", "c"), ("x", "y")], "a string, b string")
     comp = {
         r["node"]: r["component"]
-        for r in components.connected_components(pairs, local_threshold=lt).collect()
+        for r in components.connected_components(pairs).collect()
     }
     assert comp == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
@@ -129,9 +160,9 @@ def test_components_of_minhash_pairs_end_to_end(spark):
     assert 4 not in comp  # no near-dup edges
 
 
-def test_connected_components_random_graph_both_paths_agree(spark):
-    """Property: on a random graph the distributed min-label loop and the
-    driver union-find return identical labelings."""
+def test_connected_components_random_graph_both_paths_agree(spark, edge_limit):
+    """Property: on a random graph the distributed large-star/small-star
+    loop and the driver union-find return identical labelings."""
     import numpy as np
 
     rng = np.random.Generator(np.random.PCG64(11))
@@ -139,13 +170,12 @@ def test_connected_components_random_graph_both_paths_agree(spark):
     pairs = spark.createDataFrame(edges, "a bigint, b bigint")
     local = {
         r["node"]: r["component"]
-        for r in components.connected_components(pairs, local_threshold=10**6).collect()
+        for r in components.connected_components(pairs).collect()
     }
+    edge_limit(0)
     dist = {
         r["node"]: r["component"]
-        for r in components.connected_components(
-            pairs, max_iterations=30, local_threshold=0
-        ).collect()
+        for r in components.connected_components(pairs).collect()
     }
     assert local == dist and len(local) > 0
 

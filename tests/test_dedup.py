@@ -225,6 +225,22 @@ def _persistent_rdd_ids(spark):
     return {int(k) for k in m.keySet().toArray()}
 
 
+def _released_since(spark, before) -> bool:
+    """Poll until executor storage holds no RDD beyond `before`. ContextCleaner
+    collection is async (py4j detach -> JVM GC -> weak-ref queue); poll
+    generously — under load the sweep has taken >10 s."""
+    import gc
+    import time
+
+    for _ in range(120):
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        if not (_persistent_rdd_ids(spark) - before):
+            return True
+        time.sleep(0.5)
+    return False
+
+
 @pytest.mark.parametrize("op", ["jaccard", "containment", "jaccard_capped"])
 def test_ngram_shingle_persist_is_scoped(spark, docs, op):
     """The r5-advisor ask, pinned: nothing may stay pinned in executor
@@ -233,9 +249,6 @@ def test_ngram_shingle_persist_is_scoped(spark, docs, op):
     localCheckpoints the hashed shingle frame (exactly ONE stored RDD
     while the caller holds the result), and releasing the result returns
     executor storage to baseline via the ContextCleaner."""
-    import gc
-    import time
-
     before = _persistent_rdd_ids(spark)
     if op == "jaccard":
         out = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.3)
@@ -248,15 +261,45 @@ def test_ngram_shingle_persist_is_scoped(spark, docs, op):
     allowed = 1 if op == "jaccard_capped" else 0
     assert len(leftover) <= allowed, f"shingle persist leaked: {leftover}"
     del out
-    # ContextCleaner collection is async (py4j detach -> JVM GC -> weak-ref
-    # queue); poll generously — under load the sweep has taken >10 s
-    for _ in range(120):
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        if not (_persistent_rdd_ids(spark) - before):
-            break
-        time.sleep(0.5)
-    assert not (_persistent_rdd_ids(spark) - before), "shingle checkpoint never released"
+    assert _released_since(spark, before), "shingle checkpoint never released"
+
+
+def _graph_op(spark, name):
+    from penr_oz_agent_memory_rust_spark.operators import components
+    from penr_oz_agent_memory_rust_spark.operators.graph_stats import kcore, triangle_stats
+    from penr_oz_agent_memory_rust_spark.operators.label_prop import label_propagation
+    from penr_oz_agent_memory_rust_spark.operators.pagerank import pagerank
+
+    rows = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (6, 7)]
+    if name == "components":
+        return components.connected_components(spark.createDataFrame(rows, "a bigint, b bigint"))
+    edges = spark.createDataFrame(rows, "src bigint, dst bigint")
+    if name == "label_prop":
+        seeds = spark.createDataFrame([(1, 7), (6, 9)], "id bigint, label bigint")
+        return label_propagation(edges, seeds, iters=2)
+    if name == "pagerank":
+        return pagerank(edges, iters=2)
+    if name == "kcore":
+        return kcore(edges, k=2)
+    return triangle_stats(edges)
+
+
+@pytest.mark.parametrize("limit", [2_000_000, 0, 2], ids=["local", "distributed", "overflow"])
+@pytest.mark.parametrize("op", ["components", "label_prop", "pagerank", "kcore", "triangles"])
+def test_graph_operator_leaves_nothing_persisted(spark, monkeypatch, op, limit):
+    """The size-probed split persists the edge frame for its probe, and the
+    Spark loops persist and checkpoint per round; once the caller drops
+    the result, executor storage is back to baseline on every path (the
+    overflow path collects 3 edges, one over the limit, and then loops in
+    Spark)."""
+    from penr_oz_agent_memory_rust_spark import localdata
+
+    monkeypatch.setattr(localdata, "LOCAL_EDGE_LIMIT", limit)
+    before = _persistent_rdd_ids(spark)
+    out = _graph_op(spark, op)
+    assert out.collect()
+    del out
+    assert _released_since(spark, before), f"{op} left frames persisted"
 
 
 def test_simhash_identical_docs_collide(spark, docs):

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from penr_oz_agent_memory_rust_spark import localdata
 from penr_oz_agent_memory_rust_spark.operators.graph_stats import (
     triangle_stats,
     undirected_edges,
@@ -155,7 +156,7 @@ def test_kcore_cascade_requires_iteration(spark):
     assert core == {i: 2 for i in range(1, 6)}
 
 
-def test_kcore_local_and_distributed_paths_agree(spark):
+def test_kcore_local_and_distributed_paths_agree(spark, monkeypatch):
     """r10: kcore grew a size-probed driver-local peel (the
     connected_components strategy split); both physical paths must
     produce the identical (id, degree) fixpoint, including cascades."""
@@ -173,14 +174,15 @@ def test_kcore_local_and_distributed_paths_agree(spark):
         local = sorted(
             (r["id"], r["degree"]) for r in kcore(edges, k=k).collect()
         )
-        dist = sorted(
-            (r["id"], r["degree"])
-            for r in kcore(edges, k=k, local_threshold=0).collect()
-        )
+        with monkeypatch.context() as m:
+            m.setattr(localdata, "LOCAL_EDGE_LIMIT", 0)
+            dist = sorted(
+                (r["id"], r["degree"]) for r in kcore(edges, k=k).collect()
+            )
         assert local == dist, (k, rows, local, dist)
 
 
-def test_triangle_stats_local_and_distributed_paths_agree(spark):
+def test_triangle_stats_local_and_distributed_paths_agree(spark, monkeypatch):
     """r10: triangle_stats grew a size-probed driver-local path; both
     physical paths must be bit-identical (integer counts; clustering
     replicates Spark's f64 ops + HALF_UP round)."""
@@ -192,7 +194,6 @@ def test_triangle_stats_local_and_distributed_paths_agree(spark):
     rows = clique + [(4, 5), (5, 6), (6, 4), (6, 1), (7, 1)]
     edges = spark.createDataFrame(rows, "src bigint, dst bigint")
     local = sorted(tuple(r) for r in triangle_stats(edges).collect())
-    dist = sorted(
-        tuple(r) for r in triangle_stats(edges, local_threshold=0).collect()
-    )
+    monkeypatch.setattr(localdata, "LOCAL_EDGE_LIMIT", 0)
+    dist = sorted(tuple(r) for r in triangle_stats(edges).collect())
     assert local == dist, (local, dist)

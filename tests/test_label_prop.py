@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import pytest
 
+from penr_oz_agent_memory_rust_spark import localdata
 from penr_oz_agent_memory_rust_spark.operators.label_prop import label_propagation
 
 
@@ -74,7 +75,7 @@ def test_duplicate_directed_edge_acts_as_weight(spark):
     assert out2[0] == 9
 
 
-def test_label_prop_local_and_distributed_paths_agree(spark):
+def test_label_prop_local_and_distributed_paths_agree(spark, monkeypatch):
     """r10: label_propagation grew a size-probed driver-local loop; both
     physical paths must produce identical labels — including weighted
     votes from duplicated mirror pairs, clamped seeds, tie-breaks, and
@@ -93,10 +94,10 @@ def test_label_prop_local_and_distributed_paths_agree(spark):
             (r["id"], r["label"])
             for r in label_propagation(edges, seeds, iters=iters).collect()
         )
-        dist = sorted(
-            (r["id"], r["label"])
-            for r in label_propagation(
-                edges, seeds, iters=iters, local_threshold=0
-            ).collect()
-        )
+        with monkeypatch.context() as m:
+            m.setattr(localdata, "LOCAL_EDGE_LIMIT", 0)
+            dist = sorted(
+                (r["id"], r["label"])
+                for r in label_propagation(edges, seeds, iters=iters).collect()
+            )
         assert local == dist, (iters, local, dist)

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 
+from penr_oz_agent_memory_rust_spark import localdata
 from penr_oz_agent_memory_rust_spark.operators.pagerank import pagerank
 
 
@@ -64,7 +65,7 @@ def test_deterministic_across_runs(spark):
     assert a == b
 
 
-def test_pagerank_local_and_distributed_paths_agree(spark):
+def test_pagerank_local_and_distributed_paths_agree(spark, monkeypatch):
     """r10: pagerank grew a size-probed driver-local power iteration.
     Because every iteration's 12dp round puts values ON the rounding
     grid, downstream small-integer arithmetic lands exactly on half-grain
@@ -83,10 +84,9 @@ def test_pagerank_local_and_distributed_paths_agree(spark):
         local = {
             r["id"]: r["rank"] for r in pagerank(edges, iters=iters).collect()
         }
-        dist = {
-            r["id"]: r["rank"]
-            for r in pagerank(edges, iters=iters, local_threshold=0).collect()
-        }
+        with monkeypatch.context() as m:
+            m.setattr(localdata, "LOCAL_EDGE_LIMIT", 0)
+            dist = {r["id"]: r["rank"] for r in pagerank(edges, iters=iters).collect()}
         assert set(local) == set(dist), (iters, local, dist)
         for nd in local:
             assert abs(local[nd] - dist[nd]) <= 1.001e-12, (iters, nd, local[nd], dist[nd])

@@ -119,6 +119,26 @@ def test_failed_overwrite_keeps_table_and_removes_stage(spark, make_table):
     assert {r["id"] for r in t.read().collect()} == {"a", "b", "c"}
 
 
+def test_empty_local_df_is_a_jvm_local_scan(spark, tmp_path):
+    """An empty frame is built on the JVM from its schema alone: the
+    executed plan is a LocalTableScan, not a Python-RDD scan, the schema is
+    exact, and ParquetTable.ensure still writes a table pyarrow reads."""
+    from penr_oz_agent_memory_rust_spark.localdata import local_df
+
+    for schema in (SCHEMA, "a bigint, v array<float>"):
+        empty = local_df(spark, [], schema)
+        assert empty.collect() == []
+        plan = empty._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert local_df(spark, [], SCHEMA).schema == SCHEMA
+    assert empty.schema == spark.createDataFrame([], "a bigint, v array<float>").schema
+    t = ParquetTable(spark, str(tmp_path / "fresh"), SCHEMA)
+    t.ensure()
+    got = pq.read_table(t.path)
+    assert got.num_rows == 0 and got.column_names == ["id", "val", "tag"]
+    assert t.read().count() == 0
+
+
 def test_merge_upsert_keeps_file_count(spark, tmp_path):
     """Repeated single-row upserts on a one-file table leave one file
     (the union with the update adds a partition each call), and the
