@@ -5199,361 +5199,319 @@ def q_kfold_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, out.schema)
 
 
-# prefix (~50) of this dict, so slots 1-50 hold one oracle-checked gate
-# per §2 operator and per flagship ★ pipeline (merged q_* gates bundle
-# sibling variants). Slots beyond the window hold the standalone variants
-# (already pinned via their merged gate and the local verify harness) and,
-# LAST, the intentionally-no-oracle queries (f32 BLAS / sketches /
-# approximate by design — exactness or accuracy pinned in tests/).
+# The query registry. Its order is part of the driver contract: the driver
+# certifies the first 50 names (the keys of CORRECTNESS_r11.json, in order),
+# so a reorder or an insert above slot 50 changes what it checks. The
+# queries without an oracle in oracle_sql() come last.
 _RAW_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        # --- window: §2 parity gates
-        "mem_search_topk": q_mem_search_topk,
-        "mem_search_filters": q_mem_search_filters,
-        # (upsert_latest_by_key / session_pagination / fk_integrity /
-        #  distance_metrics / sql_api_search / mem_delete_anti_join rotated
-        #  out of the window in r8 — §2 parity gates unchanged + green since
-        #  r2, still in the full local verify harness — to make room for the
-        #  six r7-tail gates the r7 verdict asked to certify)
-        # --- window: ★ dedup family
-        "dedup_exact_suite": q_dedup_exact_suite,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_ngram_suite": q_dedup_ngram_suite,
-        "dedup_simhash": q_dedup_simhash,
-        "embedding_neardup": q_embedding_neardup,
-        "dedup_clusters": q_dedup_clusters,
-        "incremental_neardup": q_incremental_neardup,
-        "neardup_keep_best": q_neardup_keep_best,
-        # --- window: ★ search / ranking
-        # (bm25_search / hybrid_search_rrf / quantized_search /
-        #  bq_ann_rerank / mutual_knn rotated out of the window in r9 —
-        #  unchanged + green since r2-r3, still in the full local verify
-        #  harness — to make room for the five r8 gates below)
-        "knn_suite": q_knn_suite,
-        "ts_gapfill_interp": q_ts_gapfill_interp,
-        "versioned_merge_pruned": q_versioned_merge_pruned,
-        "stream_cms_topk": q_stream_cms_topk,
-        "media_phash_dedup": q_media_phash_dedup,
-        # --- window: ★ text / corpus pipeline
-        "text_normalize": q_text_normalize,
-        "text_profile": q_text_profile,
-        "gopher_rules": q_gopher_rules,
-        "winnowing_fps": q_winnowing_fps,
-        "decontaminate_ngram": q_decontaminate_ngram,
-        "jsonl_rescue": q_jsonl_rescue,
-        "sampling_suite": q_sampling_suite,
-        "quality_quantile_filter": q_quality_quantile_filter,
-        "doc_chunking": q_doc_chunking,
-        "pipeline_clean_corpus": q_pipeline_clean_corpus,
-        "pipeline_curate_corpus": q_pipeline_curate_corpus,
-        # --- window: ★ multimodal plumbing
-        "multimodal_features": q_multimodal_features,
-        "multimodal_pipeline": q_multimodal_pipeline,
-        # --- window: ★ training-data export
-        "training_shards": q_training_shards,
-        "corpus_mix": q_corpus_mix,
-        "kfold_split": q_kfold_split,
-        # --- window: ★ streaming + time-series
-        "stream_window_agg": q_stream_window_agg,
-        "stream_dedup_distinct": q_stream_dedup_distinct,
-        "stream_ivf_append": q_stream_ivf_append,
-        "asof_join_suite": q_asof_join_suite,
-        # --- window: r8 rotation — the r7-tail gates the r7 verdict asked
-        #     CORRECTNESS to certify (plus asof_join_suite above, whose
-        #     oracle grew to 4 direction variants in r7)
-        # --- window: r10 NEW gates — URL canonicalization + canonical-URL
-        #     keep-best dedup (the crawl pipeline's front dedup stage,
-        #     operators/urls.py; oracle mirrors every normalization step
-        #     function-for-function). New code ships driver-certified; to
-        #     make room, webdataset_roundtrip / skew_report rotated out
-        #     (certified r8 AND r9, code unchanged this round, still in
-        #     the local gate).
-        "url_canonicalize": q_url_canonicalize,
-        "url_dedup": q_url_dedup,
-        "minhash_est_pairs": q_minhash_est_pairs,
-        "minhash_calibration": q_minhash_calibration,
-        "knn_self_all_pairs_expr": q_knn_self_all_pairs_expr,
-        # --- window: r10 rotation — five NEVER-driver-certified rows
-        #     swapped in per the r9 verdict's cadence ask #3 (dup-span
-        #     audit + removal, the shingle-clique leakage-safe split,
-        #     retrieval hard negatives, TPC-H Q10). Rotated out to make
-        #     room: skew_salted_targeted / dedup_funnel_verify /
-        #     source_quality_profile / source_curation / asof_global
-        #     (all five driver-certified in CORRECTNESS_r09, code
-        #     unchanged this round, still in the 237-query local gate).
-        "dup_span_coverage": q_dup_span_coverage,
-        "remove_dup_spans": q_remove_dup_spans,
-        "leakage_safe_split": q_leakage_safe_split,
-        "hard_negatives": q_hard_negatives,
-        "tpch_q10_returned_items": q_tpch_q10_returned_items,
-        # --- window: r9 NEW gates — the boilerplate-first candidate-mass
-        #     remediation the r8 verdict asked to make the funnel's default
-        #     posture (ask #2): the symmetric strip operator itself, and the
-        #     full default-posture funnel (gopher → strip → est over cleaned
-        #     text → exact verify over raw text → keep-best) with every tier
-        #     replayed in the oracle. New code ships driver-certified; to
-        #     make room, the bq_ann / bq_neardup siblings rotated out
-        #     (green + code-unchanged since r2-r3, r8-certified, still in
-        #     the local gate). Mechanical certified-at-least-once count —
-        #     the union of names across CORRECTNESS_r01..r09 plus the
-        #     five first-time rows in this r10 window (dup_span_coverage,
-        #     remove_dup_spans, leakage_safe_split, hard_negatives,
-        #     tpch_q10_returned_items) — is 124 of 239 registered queries
-        #     (the two r10 URL gates ship in-window, certified on arrival)
-        #     under CURRENT naming: early windows overlapped heavily and
-        #     several merged gates renamed their ancestors, so the honest
-        #     cadence target is the 115 below-boundary rows that have
-        #     never held a driver slot — rotate ~5 of those in per round
-        #     (all are checked by the full local gate every round
-        #     regardless).
-        "strip_boilerplate": q_strip_boilerplate,
-        "pipeline_curate_funnel": q_pipeline_curate_funnel,
-        # --- window: r9 NEW gate — per-source common-LINE boilerplate
-        #     removal (CCNet-style site-chrome strip, the structural
-        #     sibling of strip_boilerplate_spans). rolling_series_stats
-        #     rotated out to make room (unchanged + green since r4,
-        #     multiply driver-certified, still in the local gate).
-        "strip_common_lines": q_strip_common_lines,
-        # --- window: r9 NEW gate — the funnel planner's decision row
-        #     (plan_dedup_funnel over measured calibration + bucket
-        #     counts; the oracle replays the S-curve / binomial-tail /
-        #     quantile arithmetic). incremental_quantile_refresh rotated
-        #     out to make room (unchanged + green since r6, r8-certified,
-        #     still in the local gate).
-        "funnel_plan": q_funnel_plan,
-        # --- window: r9 NEW gate — per-shard loader-integrity manifest
-        #     (count + bytes + order-binding commutative checksum).
-        #     semantic_decontaminate rotated out to make room (unchanged +
-        #     green since r4, r8-certified, still in the local gate).
-        "shard_checksums": q_shard_checksums,
-        # --- r11 rotation plan: once CORRECTNESS_r10 certifies the five
-        #     first-time rows above (plus funnel_plan's REVISED arithmetic
-        #     — kept in-window because the factorial fix changed both
-        #     engines this round), swap ~5 certified rows out for more
-        #     never-certified below-boundary rows — e.g. tpch_q4_order_priority,
-        #     tpch_q7_volume_shipping, preference_pairs, knn_pagerank,
-        #     line_dedup — continuing the cadence toward the 115 rows
-        #     that have never held a driver slot.
-        # --- window boundary (~50) ---
-        "sessionization": q_sessionization,
-        "events_followup_day": q_events_followup_day,
-        # --- window: ★ warehouse ops
-        "scd2_customer_segment": q_scd2_customer_segment,
-        "skew_salted_pipeline": q_skew_salted_pipeline,
-        # --- window: TPC-H + SQL-surface breadth
-        "tpch_q1_pricing_summary": q_tpch_q1_pricing_summary,
-        "tpch_q3_shipping_priority": q_tpch_q3_shipping_priority,
-        "tpch_q5_local_supplier_volume": q_tpch_q5_local_supplier_volume,
-        "tpch_q6_q14": q_tpch_q6_q14,
-        "events_multidim_agg": q_events_multidim_agg,
-        "events_window_frames": q_events_window_frames,
-        "events_unpivot": q_events_unpivot,
-        "events_variant_agg": q_events_variant_agg,
-        "doc_bigrams_udtf": q_doc_bigrams_udtf,
-        # --- beyond the window: additional ★ operators first (picked up if
-        #     the driver's evaluation cap ever exceeds the window).
-        #     session_touch / json_metadata_extract / projection_validate
-        #     rotated out of the window in r7 (unchanged + green since r2)
-        #     to make room for the three r6 flagships — still gated by the
-        #     full local verify harness every round; zscore_events /
-        #     repetition_profile / word_freq_topk / pii_scan rotated out on
-        #     the same basis for the four r7 gates (gopher_rules,
-        #     neardup_keep_best, jsonl_rescue, pipeline_curate_corpus);
-        #     the six §2 parity gates below rotated out in r8 for the
-        #     r7-tail gates (all unchanged + green since r2)
-        "upsert_latest_by_key": q_upsert_latest_by_key,
-        "session_pagination": q_session_pagination,
-        "fk_integrity": q_fk_integrity,
-        "distance_metrics": q_distance_metrics,
-        "sql_api_search": q_sql_api_search,
-        "mem_delete_anti_join": q_mem_delete_anti_join,
-        # --- r9 rotation: the five r8 gates moved INTO the window (above);
-        #     these five long-stable search/ranking rows moved out on the
-        #     same basis as the r7/r8 rotations (code-unchanged + green
-        #     since r2-r3, still in the 232-query local gate every round)
-        "bm25_search": q_bm25_search,
-        "hybrid_search_rrf": q_hybrid_search_rrf,
-        "quantized_search": q_quantized_search,
-        "bq_ann_rerank": q_bq_ann_rerank,
-        "mutual_knn": q_mutual_knn,
-        # --- r9 rotation (cont.): the two new strip/funnel gates entered
-        #     the window; these bq siblings moved out on the same basis
-        "bq_ann": q_bq_ann,
-        "bq_neardup": q_bq_neardup,
-        "rolling_series_stats": q_rolling_series_stats,
-        "incremental_quantile_refresh": q_incremental_quantile_refresh,
-        "semantic_decontaminate": q_semantic_decontaminate,
-        "zscore_events": q_zscore_events,
-        "repetition_profile": q_repetition_profile,
-        "word_freq_topk": q_word_freq_topk,
-        "pii_scan": q_pii_scan,
-        "session_touch": q_session_touch,
-        "json_metadata_extract": q_json_metadata_extract,
-        "projection_validate": q_projection_validate,
-        "semantic_dedup": q_semantic_dedup,
-        "dsir_select": q_dsir_select,
-        "stream_session_window": q_stream_session_window,
-        "stream_interval_join": q_stream_interval_join,
-        "stream_interval_join_outer": q_stream_interval_join_outer,
-        "dedup_incremental": q_dedup_incremental,
-        "dedup_incremental_bloom": q_dedup_incremental_bloom,
-        "line_dedup": q_line_dedup,
-        "heavy_hitters_cms": q_heavy_hitters_cms,
-        "approx_distinct_hll": q_approx_distinct_hll,
-        "preference_pairs": q_preference_pairs,
-        "knn_pagerank": q_knn_pagerank,
-        "knn_kcore": q_knn_kcore,
-        "lm_quality": q_lm_quality,
-        "funnel_conversion": q_funnel_conversion,
-        # --- r10 rotation: the five r8 gates moved below the boundary
-        #     (driver-certified in CORRECTNESS_r09, code unchanged)
-        "skew_salted_targeted": q_skew_salted_targeted,
-        "dedup_funnel_verify": q_dedup_funnel_verify,
-        "source_quality_profile": q_source_quality_profile,
-        "source_curation": q_source_curation,
-        "asof_global": q_asof_global,
-        "url_domain_block": q_url_domain_block,
-        "url_dedup_incremental": q_url_dedup_incremental,
-        "extract_links": q_extract_links,
-        "webdataset_roundtrip": q_webdataset_roundtrip,
-        "skew_report": q_skew_report,
-        "tpch_q4_order_priority": q_tpch_q4_order_priority,
-        "tpch_q7_volume_shipping": q_tpch_q7_volume_shipping,
-        "tpch_q13_order_distribution": q_tpch_q13_order_distribution,
-        "tpch_q18_large_volume": q_tpch_q18_large_volume,
-        "tpch_q2_min_cost_supplier": q_tpch_q2_min_cost_supplier,
-        "tpch_q8_market_share": q_tpch_q8_market_share,
-        "tpch_q9_product_profit": q_tpch_q9_product_profit,
-        "tpch_q11_important_parts": q_tpch_q11_important_parts,
-        "tpch_q12_priority_by_status": q_tpch_q12_priority_by_status,
-        "tpch_q15_top_supplier": q_tpch_q15_top_supplier,
-        "tpch_q16_supplier_counts": q_tpch_q16_supplier_counts,
-        "tpch_q17_small_quantity": q_tpch_q17_small_quantity,
-        "tpch_q19_disjunctive_revenue": q_tpch_q19_disjunctive_revenue,
-        "tpch_q20_promo_suppliers": q_tpch_q20_promo_suppliers,
-        "tpch_q21_waiting_supplier": q_tpch_q21_waiting_supplier,
-        "tpch_q22_global_sales": q_tpch_q22_global_sales,
-        "incremental_agg_refresh": q_incremental_agg_refresh,
-        "analyze_table_stats": q_analyze_table_stats,
-        "curriculum_shards": q_curriculum_shards,
-        "token_offset_shards": q_token_offset_shards,
-        "stream_enrich_counts": q_stream_enrich_counts,
-        "data_expectations": q_data_expectations,
-        "retention_cohorts": q_retention_cohorts,
-        "dedup_keep_best": q_dedup_keep_best,
-        "dsir_weights": q_dsir_weights,
-        "knn_join": q_knn_join,
-        "dedup_exact": q_dedup_exact,
-        # --- beyond the window: standalone variants of the merged gates
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_char_ngram": q_dedup_char_ngram,
-        "multimodal_frames": q_multimodal_frames,
-        "multimodal_resize": q_multimodal_resize,
-        "mem_search_label_filter": q_mem_search_label_filter,
-        "mem_search_threshold": q_mem_search_threshold,
-        "fk_semi_join": q_fk_semi_join,
-        "fk_anti_rejects": q_fk_anti_rejects,
-        "text_lang_id": q_text_lang_id,
-        "text_quality_tokens": q_text_quality_tokens,
-        "doc_fingerprint": q_doc_fingerprint,
-        "repetition_score": q_repetition_score,
-        "stratified_sample": q_stratified_sample,
-        "deterministic_sample": q_deterministic_sample,
-        "events_sessionize": q_events_sessionize,
-        "events_session_window_native": q_events_session_window_native,
-        "asof_latest_order": q_asof_latest_order,
-        "asof_tolerance_order": q_asof_tolerance_order,
-        "tpch_q6_revenue": q_tpch_q6_revenue,
-        "tpch_q14_promo_revenue": q_tpch_q14_promo_revenue,
-        "events_rollup": q_events_rollup,
-        "events_cube": q_events_cube,
-        "events_grouping_sets": q_events_grouping_sets,
-        "user_running_totals": q_user_running_totals,
-        "event_gap_stats": q_event_gap_stats,
-        # --- beyond the window: additional SQL-surface queries
-        "events_window_agg": q_events_window_agg,
-        "events_pivot": q_events_pivot,
-        "events_percentiles": q_events_percentiles,
-        "events_value_deciles": q_events_value_deciles,
-        "user_event_type_sets": q_user_event_type_sets,
-        "orders_by_month": q_orders_by_month,
-        "topk_per_group": q_topk_per_group,
-        "distinct_users_per_type": q_distinct_users_per_type,
-        "users_purchase_no_error": q_users_purchase_no_error,
-        "users_purchase_and_error": q_users_purchase_and_error,
-        "embedding_stats": q_embedding_stats,
-        "docs_with_embeddings": q_docs_with_embeddings,
-        "retrieval_eval": q_retrieval_eval,
-        "pca_gramian": q_pca_gramian,
-        "embedding_outliers": q_embedding_outliers,
-        "stream_embedding_drift": q_stream_embedding_drift,
-        "source_divergence": q_source_divergence,
-        "label_propagation": q_label_propagation,
-        "pmi_collocations": q_pmi_collocations,
-        "psi_value_drift": q_psi_value_drift,
-        "mad_outliers": q_mad_outliers,
-        "tfidf_keywords": q_tfidf_keywords,
-        "source_overlap": q_source_overlap,
-        "quality_quantile_by_lang": q_quality_quantile_by_lang,
-        "events_transition_matrix": q_events_transition_matrix,
-        "knn_graph_triangles": q_knn_graph_triangles,
-        "lm_backoff_quality": q_lm_backoff_quality,
-        "fuzzy_part_matches": q_fuzzy_part_matches,
-        "cdc_chunking": q_cdc_chunking,
-        "vocab_coverage": q_vocab_coverage,
-        "seasonal_anomalies": q_seasonal_anomalies,
-        "html_strip": q_html_strip,
-        "fuzzy_best_match": q_fuzzy_best_match,
-        "events_value_ranks": q_events_value_ranks,
-        "stream_cdc_dedup": q_stream_cdc_dedup,
-        "corpus_datasheet": q_corpus_datasheet,
-        "knn_graph_walks": q_knn_graph_walks,
-        "zorder_values": q_zorder_values,
-        "quality_winsorize": q_quality_winsorize,
-        "corpus_mix_temperature": q_corpus_mix_temperature,
-        "kmeans_assign": q_kmeans_assign,
-        "centroid_classifier": q_centroid_classifier,
-        "versioned_time_travel": q_versioned_time_travel,
-        "versioned_schema_evolution": q_versioned_schema_evolution,
-        "versioned_optimize_read": q_versioned_optimize_read,
-        "versioned_cdf_refresh": q_versioned_cdf_refresh,
-        "stream_cdc_merge": q_stream_cdc_merge,
-        "quality_exact_quantiles": q_quality_exact_quantiles,
-        "doc_quantile_buckets": q_doc_quantile_buckets,
-        "events_value_histogram": q_events_value_histogram,
-        "weighted_doc_sample": q_weighted_doc_sample,
-        "events_pivot_matrix": q_events_pivot_matrix,
-        "ngram_containment": q_ngram_containment,
-        "langid_confusion": q_langid_confusion,
-        "jl_exact_ann": q_jl_exact_ann,
-        "mmr_rerank": q_mmr_rerank,
-        # --- r7: fold-balance statistical gate + oracle-checked twins of
-        #     the approximate/f32 flagships (r6 judge ask #4)
-        "kfold_balance": q_kfold_balance,
-        "diversity_sample_seeded": q_diversity_sample_seeded,
-        "sequence_packing": q_sequence_packing,
-        "bpe_tokenize": q_bpe_tokenize,
-        # --- LAST: intentionally no-oracle (approximate / f32 BLAS /
-        #     sketch algorithms; accuracy pinned in tests/)
-        "semantic_decontaminate_blas": q_semantic_decontaminate_blas,
-        "semantic_dedup_ivf": q_semantic_dedup_ivf,
-        "knn_join_blocked": q_knn_join_blocked,
-        "lsh_ann": q_lsh_ann,
-        "lsh_ann_multiprobe": q_lsh_ann_multiprobe,
-        "ivf_ann": q_ivf_ann,
-        "pq_ann": q_pq_ann,
-        "ivfpq_ann": q_ivfpq_ann,
-        "kmeans_profile": q_kmeans_profile,
-        "quality_classifier_train": q_quality_classifier_train,
-        "jl_projected_ann": q_jl_projected_ann,
-        "pca_projected_ann": q_pca_projected_ann,
-        "knn_self_all_pairs": q_knn_self_all_pairs,
-        "knn_graph_lsh": q_knn_graph_lsh,
-        "diversity_sample": q_diversity_sample,
-        "lm_quality_arrow": q_lm_quality_arrow,
-        "embed_documents_search": q_embed_documents_search,
-        "approx_distinct_users": q_approx_distinct_users,
-        "events_percentiles_approx": q_events_percentiles_approx,
+    "mem_search_topk": q_mem_search_topk,
+    "mem_search_filters": q_mem_search_filters,
+    "dedup_exact_suite": q_dedup_exact_suite,
+    "dedup_minhash_lsh": q_dedup_minhash_lsh,
+    "dedup_ngram_suite": q_dedup_ngram_suite,
+    "dedup_simhash": q_dedup_simhash,
+    "embedding_neardup": q_embedding_neardup,
+    "dedup_clusters": q_dedup_clusters,
+    "incremental_neardup": q_incremental_neardup,
+    "neardup_keep_best": q_neardup_keep_best,
+    "knn_suite": q_knn_suite,
+    "ts_gapfill_interp": q_ts_gapfill_interp,
+    "versioned_merge_pruned": q_versioned_merge_pruned,
+    "stream_cms_topk": q_stream_cms_topk,
+    "media_phash_dedup": q_media_phash_dedup,
+    "text_normalize": q_text_normalize,
+    "text_profile": q_text_profile,
+    "gopher_rules": q_gopher_rules,
+    "winnowing_fps": q_winnowing_fps,
+    "decontaminate_ngram": q_decontaminate_ngram,
+    "jsonl_rescue": q_jsonl_rescue,
+    "sampling_suite": q_sampling_suite,
+    "quality_quantile_filter": q_quality_quantile_filter,
+    "doc_chunking": q_doc_chunking,
+    "pipeline_clean_corpus": q_pipeline_clean_corpus,
+    "pipeline_curate_corpus": q_pipeline_curate_corpus,
+    "multimodal_features": q_multimodal_features,
+    "multimodal_pipeline": q_multimodal_pipeline,
+    "training_shards": q_training_shards,
+    "corpus_mix": q_corpus_mix,
+    "kfold_split": q_kfold_split,
+    "stream_window_agg": q_stream_window_agg,
+    "stream_dedup_distinct": q_stream_dedup_distinct,
+    "stream_ivf_append": q_stream_ivf_append,
+    "asof_join_suite": q_asof_join_suite,
+    "url_canonicalize": q_url_canonicalize,
+    "url_dedup": q_url_dedup,
+    "minhash_est_pairs": q_minhash_est_pairs,
+    "minhash_calibration": q_minhash_calibration,
+    "knn_self_all_pairs_expr": q_knn_self_all_pairs_expr,
+    "dup_span_coverage": q_dup_span_coverage,
+    "remove_dup_spans": q_remove_dup_spans,
+    "leakage_safe_split": q_leakage_safe_split,
+    "hard_negatives": q_hard_negatives,
+    "tpch_q10_returned_items": q_tpch_q10_returned_items,
+    "strip_boilerplate": q_strip_boilerplate,
+    "pipeline_curate_funnel": q_pipeline_curate_funnel,
+    "strip_common_lines": q_strip_common_lines,
+    "funnel_plan": q_funnel_plan,
+    "shard_checksums": q_shard_checksums,
+    "sessionization": q_sessionization,
+    "events_followup_day": q_events_followup_day,
+    "scd2_customer_segment": q_scd2_customer_segment,
+    "skew_salted_pipeline": q_skew_salted_pipeline,
+    "tpch_q1_pricing_summary": q_tpch_q1_pricing_summary,
+    "tpch_q3_shipping_priority": q_tpch_q3_shipping_priority,
+    "tpch_q5_local_supplier_volume": q_tpch_q5_local_supplier_volume,
+    "tpch_q6_q14": q_tpch_q6_q14,
+    "events_multidim_agg": q_events_multidim_agg,
+    "events_window_frames": q_events_window_frames,
+    "events_unpivot": q_events_unpivot,
+    "events_variant_agg": q_events_variant_agg,
+    "doc_bigrams_udtf": q_doc_bigrams_udtf,
+    "upsert_latest_by_key": q_upsert_latest_by_key,
+    "session_pagination": q_session_pagination,
+    "fk_integrity": q_fk_integrity,
+    "distance_metrics": q_distance_metrics,
+    "sql_api_search": q_sql_api_search,
+    "mem_delete_anti_join": q_mem_delete_anti_join,
+    "bm25_search": q_bm25_search,
+    "hybrid_search_rrf": q_hybrid_search_rrf,
+    "quantized_search": q_quantized_search,
+    "bq_ann_rerank": q_bq_ann_rerank,
+    "mutual_knn": q_mutual_knn,
+    "bq_ann": q_bq_ann,
+    "bq_neardup": q_bq_neardup,
+    "rolling_series_stats": q_rolling_series_stats,
+    "incremental_quantile_refresh": q_incremental_quantile_refresh,
+    "semantic_decontaminate": q_semantic_decontaminate,
+    "zscore_events": q_zscore_events,
+    "repetition_profile": q_repetition_profile,
+    "word_freq_topk": q_word_freq_topk,
+    "pii_scan": q_pii_scan,
+    "session_touch": q_session_touch,
+    "json_metadata_extract": q_json_metadata_extract,
+    "projection_validate": q_projection_validate,
+    "semantic_dedup": q_semantic_dedup,
+    "dsir_select": q_dsir_select,
+    "stream_session_window": q_stream_session_window,
+    "stream_interval_join": q_stream_interval_join,
+    "stream_interval_join_outer": q_stream_interval_join_outer,
+    "dedup_incremental": q_dedup_incremental,
+    "dedup_incremental_bloom": q_dedup_incremental_bloom,
+    "line_dedup": q_line_dedup,
+    "heavy_hitters_cms": q_heavy_hitters_cms,
+    "approx_distinct_hll": q_approx_distinct_hll,
+    "preference_pairs": q_preference_pairs,
+    "knn_pagerank": q_knn_pagerank,
+    "knn_kcore": q_knn_kcore,
+    "lm_quality": q_lm_quality,
+    "funnel_conversion": q_funnel_conversion,
+    "skew_salted_targeted": q_skew_salted_targeted,
+    "dedup_funnel_verify": q_dedup_funnel_verify,
+    "source_quality_profile": q_source_quality_profile,
+    "source_curation": q_source_curation,
+    "asof_global": q_asof_global,
+    "url_domain_block": q_url_domain_block,
+    "url_dedup_incremental": q_url_dedup_incremental,
+    "extract_links": q_extract_links,
+    "webdataset_roundtrip": q_webdataset_roundtrip,
+    "skew_report": q_skew_report,
+    "tpch_q4_order_priority": q_tpch_q4_order_priority,
+    "tpch_q7_volume_shipping": q_tpch_q7_volume_shipping,
+    "tpch_q13_order_distribution": q_tpch_q13_order_distribution,
+    "tpch_q18_large_volume": q_tpch_q18_large_volume,
+    "tpch_q2_min_cost_supplier": q_tpch_q2_min_cost_supplier,
+    "tpch_q8_market_share": q_tpch_q8_market_share,
+    "tpch_q9_product_profit": q_tpch_q9_product_profit,
+    "tpch_q11_important_parts": q_tpch_q11_important_parts,
+    "tpch_q12_priority_by_status": q_tpch_q12_priority_by_status,
+    "tpch_q15_top_supplier": q_tpch_q15_top_supplier,
+    "tpch_q16_supplier_counts": q_tpch_q16_supplier_counts,
+    "tpch_q17_small_quantity": q_tpch_q17_small_quantity,
+    "tpch_q19_disjunctive_revenue": q_tpch_q19_disjunctive_revenue,
+    "tpch_q20_promo_suppliers": q_tpch_q20_promo_suppliers,
+    "tpch_q21_waiting_supplier": q_tpch_q21_waiting_supplier,
+    "tpch_q22_global_sales": q_tpch_q22_global_sales,
+    "incremental_agg_refresh": q_incremental_agg_refresh,
+    "analyze_table_stats": q_analyze_table_stats,
+    "curriculum_shards": q_curriculum_shards,
+    "token_offset_shards": q_token_offset_shards,
+    "stream_enrich_counts": q_stream_enrich_counts,
+    "data_expectations": q_data_expectations,
+    "retention_cohorts": q_retention_cohorts,
+    "dedup_keep_best": q_dedup_keep_best,
+    "dsir_weights": q_dsir_weights,
+    "knn_join": q_knn_join,
+    "dedup_exact": q_dedup_exact,
+    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
+    "dedup_char_ngram": q_dedup_char_ngram,
+    "multimodal_frames": q_multimodal_frames,
+    "multimodal_resize": q_multimodal_resize,
+    "mem_search_label_filter": q_mem_search_label_filter,
+    "mem_search_threshold": q_mem_search_threshold,
+    "fk_semi_join": q_fk_semi_join,
+    "fk_anti_rejects": q_fk_anti_rejects,
+    "text_lang_id": q_text_lang_id,
+    "text_quality_tokens": q_text_quality_tokens,
+    "doc_fingerprint": q_doc_fingerprint,
+    "repetition_score": q_repetition_score,
+    "stratified_sample": q_stratified_sample,
+    "deterministic_sample": q_deterministic_sample,
+    "events_sessionize": q_events_sessionize,
+    "events_session_window_native": q_events_session_window_native,
+    "asof_latest_order": q_asof_latest_order,
+    "asof_tolerance_order": q_asof_tolerance_order,
+    "tpch_q6_revenue": q_tpch_q6_revenue,
+    "tpch_q14_promo_revenue": q_tpch_q14_promo_revenue,
+    "events_rollup": q_events_rollup,
+    "events_cube": q_events_cube,
+    "events_grouping_sets": q_events_grouping_sets,
+    "user_running_totals": q_user_running_totals,
+    "event_gap_stats": q_event_gap_stats,
+    "events_window_agg": q_events_window_agg,
+    "events_pivot": q_events_pivot,
+    "events_percentiles": q_events_percentiles,
+    "events_value_deciles": q_events_value_deciles,
+    "user_event_type_sets": q_user_event_type_sets,
+    "orders_by_month": q_orders_by_month,
+    "topk_per_group": q_topk_per_group,
+    "distinct_users_per_type": q_distinct_users_per_type,
+    "users_purchase_no_error": q_users_purchase_no_error,
+    "users_purchase_and_error": q_users_purchase_and_error,
+    "embedding_stats": q_embedding_stats,
+    "docs_with_embeddings": q_docs_with_embeddings,
+    "retrieval_eval": q_retrieval_eval,
+    "pca_gramian": q_pca_gramian,
+    "embedding_outliers": q_embedding_outliers,
+    "stream_embedding_drift": q_stream_embedding_drift,
+    "source_divergence": q_source_divergence,
+    "label_propagation": q_label_propagation,
+    "pmi_collocations": q_pmi_collocations,
+    "psi_value_drift": q_psi_value_drift,
+    "mad_outliers": q_mad_outliers,
+    "tfidf_keywords": q_tfidf_keywords,
+    "source_overlap": q_source_overlap,
+    "quality_quantile_by_lang": q_quality_quantile_by_lang,
+    "events_transition_matrix": q_events_transition_matrix,
+    "knn_graph_triangles": q_knn_graph_triangles,
+    "lm_backoff_quality": q_lm_backoff_quality,
+    "fuzzy_part_matches": q_fuzzy_part_matches,
+    "cdc_chunking": q_cdc_chunking,
+    "vocab_coverage": q_vocab_coverage,
+    "seasonal_anomalies": q_seasonal_anomalies,
+    "html_strip": q_html_strip,
+    "fuzzy_best_match": q_fuzzy_best_match,
+    "events_value_ranks": q_events_value_ranks,
+    "stream_cdc_dedup": q_stream_cdc_dedup,
+    "corpus_datasheet": q_corpus_datasheet,
+    "knn_graph_walks": q_knn_graph_walks,
+    "zorder_values": q_zorder_values,
+    "quality_winsorize": q_quality_winsorize,
+    "corpus_mix_temperature": q_corpus_mix_temperature,
+    "kmeans_assign": q_kmeans_assign,
+    "centroid_classifier": q_centroid_classifier,
+    "versioned_time_travel": q_versioned_time_travel,
+    "versioned_schema_evolution": q_versioned_schema_evolution,
+    "versioned_optimize_read": q_versioned_optimize_read,
+    "versioned_cdf_refresh": q_versioned_cdf_refresh,
+    "stream_cdc_merge": q_stream_cdc_merge,
+    "quality_exact_quantiles": q_quality_exact_quantiles,
+    "doc_quantile_buckets": q_doc_quantile_buckets,
+    "events_value_histogram": q_events_value_histogram,
+    "weighted_doc_sample": q_weighted_doc_sample,
+    "events_pivot_matrix": q_events_pivot_matrix,
+    "ngram_containment": q_ngram_containment,
+    "langid_confusion": q_langid_confusion,
+    "jl_exact_ann": q_jl_exact_ann,
+    "mmr_rerank": q_mmr_rerank,
+    "kfold_balance": q_kfold_balance,
+    "diversity_sample_seeded": q_diversity_sample_seeded,
+    "sequence_packing": q_sequence_packing,
+    "bpe_tokenize": q_bpe_tokenize,
+    "semantic_decontaminate_blas": q_semantic_decontaminate_blas,
+    "semantic_dedup_ivf": q_semantic_dedup_ivf,
+    "knn_join_blocked": q_knn_join_blocked,
+    "lsh_ann": q_lsh_ann,
+    "lsh_ann_multiprobe": q_lsh_ann_multiprobe,
+    "ivf_ann": q_ivf_ann,
+    "pq_ann": q_pq_ann,
+    "ivfpq_ann": q_ivfpq_ann,
+    "kmeans_profile": q_kmeans_profile,
+    "quality_classifier_train": q_quality_classifier_train,
+    "jl_projected_ann": q_jl_projected_ann,
+    "pca_projected_ann": q_pca_projected_ann,
+    "knn_self_all_pairs": q_knn_self_all_pairs,
+    "knn_graph_lsh": q_knn_graph_lsh,
+    "diversity_sample": q_diversity_sample,
+    "lm_quality_arrow": q_lm_quality_arrow,
+    "embed_documents_search": q_embed_documents_search,
+    "approx_distinct_users": q_approx_distinct_users,
+    "events_percentiles_approx": q_events_percentiles_approx,
 }
+
+# Registered but left out of bench.py's timed set (bench.HEADLINE is the
+# registry minus these, in registry order).
+UNBENCHED = frozenset({
+    "hard_negatives",
+    "tpch_q10_returned_items",
+    "dedup_incremental",
+    "tpch_q2_min_cost_supplier",
+    "tpch_q9_product_profit",
+    "tpch_q11_important_parts",
+    "tpch_q12_priority_by_status",
+    "tpch_q15_top_supplier",
+    "tpch_q16_supplier_counts",
+    "tpch_q17_small_quantity",
+    "tpch_q19_disjunctive_revenue",
+    "tpch_q20_promo_suppliers",
+    "tpch_q22_global_sales",
+    "analyze_table_stats",
+    "curriculum_shards",
+    "token_offset_shards",
+    "dsir_weights",
+    "knn_join",
+    "dedup_exact",
+    "dedup_ngram_jaccard",
+    "dedup_char_ngram",
+    "multimodal_frames",
+    "multimodal_resize",
+    "mem_search_label_filter",
+    "mem_search_threshold",
+    "fk_semi_join",
+    "fk_anti_rejects",
+    "text_lang_id",
+    "text_quality_tokens",
+    "doc_fingerprint",
+    "repetition_score",
+    "stratified_sample",
+    "deterministic_sample",
+    "events_sessionize",
+    "events_session_window_native",
+    "asof_latest_order",
+    "asof_tolerance_order",
+    "tpch_q6_revenue",
+    "tpch_q14_promo_revenue",
+    "events_rollup",
+    "events_cube",
+    "events_grouping_sets",
+    "user_running_totals",
+    "event_gap_stats",
+    "events_window_agg",
+    "events_pivot",
+    "events_percentiles",
+    "events_value_deciles",
+    "user_event_type_sets",
+    "orders_by_month",
+    "topk_per_group",
+    "distinct_users_per_type",
+    "users_purchase_no_error",
+    "users_purchase_and_error",
+    "embedding_stats",
+    "docs_with_embeddings",
+    "semantic_dedup_ivf",
+    "embed_documents_search",
+    "approx_distinct_users",
+    "events_percentiles_approx",
+})
 
 
 # ---------------------------------------------------------------- oracles

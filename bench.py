@@ -32,220 +32,38 @@ import sys
 import time
 
 import pandas as pd
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
 from penr_oz_agent_memory_rust_spark.session import get_spark
 
-# The driver-checked gate window (one per operator, merged gates included)
-# plus the no-oracle ANN strategies — so BENCH rows line up 1:1 with
-# CORRECTNESS rows.
-HEADLINE = [
-    "mem_search_topk",
-    "mem_search_filters",
-    "mem_delete_anti_join",
-    "upsert_latest_by_key",
-    "session_pagination",
-    "session_touch",
-    "fk_integrity",
-    "json_metadata_extract",
-    "projection_validate",
-    "distance_metrics",
-    "sql_api_search",
-    "dedup_exact_suite",
-    "url_canonicalize",
-    "url_dedup",
-    "url_domain_block",
-    "url_dedup_incremental",
-    "extract_links",
-    "dedup_minhash_lsh",
-    "dedup_ngram_suite",
-    "dedup_simhash",
-    "embedding_neardup",
-    "dedup_clusters",
-    "knn_suite",
-    "bm25_search",
-    "hybrid_search_rrf",
-    "quantized_search",
-    "text_profile",
-    "decontaminate_ngram",
-    "word_freq_topk",
-    "pii_scan",
-    "sampling_suite",
-    "quality_quantile_filter",
-    "zscore_events",
-    "doc_chunking",
-    "pipeline_clean_corpus",
-    "multimodal_features",
-    "multimodal_pipeline",
-    "training_shards",
-    "corpus_mix",
-    "stream_window_agg",
-    "stream_dedup_distinct",
-    "stream_ivf_append",
-    "sessionization",
-    "asof_join_suite",
-    "events_followup_day",
-    "scd2_customer_segment",
-    "skew_salted_pipeline",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q6_q14",
-    "events_multidim_agg",
-    "events_window_frames",
-    "events_unpivot",
-    "events_variant_agg",
-    "doc_bigrams_udtf",
-    "knn_join_blocked",
-    "lsh_ann",
-    "lsh_ann_multiprobe",
-    "ivf_ann",
-    "pq_ann",
-    "ivfpq_ann",
-    "bq_ann",
-    "bq_ann_rerank",
-    "bq_neardup",
-    "ts_gapfill_interp",
-    "mutual_knn",
-    "semantic_decontaminate",
-    "versioned_merge_pruned",
-    "rolling_series_stats",
-    "stream_cms_topk",
-    "kmeans_assign",
-    "kmeans_profile",
-    "centroid_classifier",
-    "quality_classifier_train",
-    "mmr_rerank",
-    "jl_projected_ann",
-    "knn_self_all_pairs",
-    "knn_graph_lsh",
-    "sequence_packing",
-    "lm_quality",
-    "lm_quality_arrow",
-    "diversity_sample",
-    "funnel_conversion",
-    "bpe_tokenize",
-    "stream_enrich_counts",
-    "data_expectations",
-    "retention_cohorts",
-    "dedup_keep_best",
-    "repetition_profile",
-    "winnowing_fps",
-    "semantic_dedup",
-    "dsir_select",
-    "stream_session_window",
-    "stream_interval_join",
-    "stream_interval_join_outer",
-    "line_dedup",
-    "dup_span_coverage",
-    "remove_dup_spans",
-    "heavy_hitters_cms",
-    "approx_distinct_hll",
-    "preference_pairs",
-    "leakage_safe_split",
-    "dedup_incremental_bloom",
-    "knn_pagerank",
-    "retrieval_eval",
-    "pca_gramian",
-    "embedding_outliers",
-    "pca_projected_ann",
-    "stream_embedding_drift",
-    "source_divergence",
-    "label_propagation",
-    "pmi_collocations",
-    "psi_value_drift",
-    "events_transition_matrix",
-    "mad_outliers",
-    "tfidf_keywords",
-    "source_overlap",
-    "quality_quantile_by_lang",
-    "knn_graph_triangles",
-    "lm_backoff_quality",
-    "fuzzy_part_matches",
-    "quality_winsorize",
-    "corpus_mix_temperature",
-    "tpch_q4_order_priority",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q21_waiting_supplier",
-    "tpch_q13_order_distribution",
-    "tpch_q18_large_volume",
-    "cdc_chunking",
-    "vocab_coverage",
-    "seasonal_anomalies",
-    "html_strip",
-    "fuzzy_best_match",
-    "events_value_ranks",
-    "stream_cdc_dedup",
-    "corpus_datasheet",
-    "knn_graph_walks",
-    "zorder_values",
-    "incremental_agg_refresh",
-    "incremental_quantile_refresh",
-    "media_phash_dedup",
-    "knn_kcore",
-    "versioned_time_travel",
-    "versioned_schema_evolution",
-    "versioned_optimize_read",
-    "versioned_cdf_refresh",
-    "stream_cdc_merge",
-    "quality_exact_quantiles",
-    "doc_quantile_buckets",
-    "events_value_histogram",
-    "weighted_doc_sample",
-    "events_pivot_matrix",
-    "ngram_containment",
-    "langid_confusion",
-    "jl_exact_ann",
-    "text_normalize",
-    "incremental_neardup",
-    "kfold_split",
-    "gopher_rules",
-    "neardup_keep_best",
-    "jsonl_rescue",
-    "pipeline_curate_corpus",
-    "strip_boilerplate",
-    "pipeline_curate_funnel",
-    "strip_common_lines",
-    "funnel_plan",
-    "shard_checksums",
-    "webdataset_roundtrip",
-    "skew_report",
-    "minhash_est_pairs",
-    "minhash_calibration",
-    "kfold_balance",
-    "diversity_sample_seeded",
-    "knn_self_all_pairs_expr",
-    "semantic_decontaminate_blas",
-    # r8 additions
-    "skew_salted_targeted",
-    "dedup_funnel_verify",
-    "source_quality_profile",
-    "source_curation",
-    "asof_global",
-]
+HEADLINE = [n for n in entrymod.queries() if n not in entrymod.UNBENCHED]
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
-    spark = get_spark(app_name="poz-bench")
-    qs = entrymod.queries()
-    # warmup: JVM/codegen/parquet-footer caches AND the one-time package
-    # shipping (zip + addPyFile) that the first queries() call triggers, so
-    # per-query numbers reflect steady state rather than session startup
+def time_query(fn, spark: SparkSession, sf_dir: str) -> float:
+    """Build and run one query end to end through the noop sink (full plan,
+    no driver collect); returns the wall seconds."""
+    t0 = time.time()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return round(time.time() - t0, 3)
+
+
+def warm_up(spark: SparkSession, qs: dict, sf_dir: str) -> None:
+    """Untimed warm-up, so per-query times reflect steady state rather than
+    session startup: JVM, codegen and parquet-footer caches, the one-time
+    package shipping (zip + addPyFile) that the first query call triggers,
+    and the Python worker pool — one tiny Arrow-batched UDF job over every
+    core forks the daemon workers and imports pandas/numpy in each, so the
+    first Python-path query measures the operator, not interpreter
+    startup."""
     spark.range(1000).selectExpr("sum(id)").collect()
-    for t in ("embeddings", "documents", "lineitem", "events", "orders", "customer"):
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").count() if t != "events" else None
-    qs["deterministic_sample"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # warm the Python worker pool too: one tiny Arrow-batched UDF job that
-    # touches every core forks the daemon workers and imports pandas/numpy
-    # in each, so the first Python-path query measures the operator, not
-    # interpreter startup
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
+    for t in ("embeddings", "documents", "lineitem", "orders", "customer"):
+        spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
+    time_query(qs["deterministic_sample"], spark, sf_dir)
 
     @pandas_udf("double")
     def _warm(v: pd.Series) -> pd.Series:
@@ -253,15 +71,23 @@ def main() -> None:
 
         return v * np.float64(1.0)
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = spark.sparkContext.defaultParallelism
     (
-        spark.range(cpus * 2)
-        .repartition(cpus)
+        spark.range(cores * 2)
+        .repartition(cores)
         .select(_warm(F.col("id").cast("double")))
         .write.format("noop")
         .mode("overwrite")
         .save()
     )
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
+    spark = get_spark(app_name="poz-bench")
+    qs = entrymod.queries()
+    warm_up(spark, qs, sf_dir)
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     # wall-clock budget: the headline list has grown past 90 queries, and
     # the driver's capture window is finite — finish the CURRENT round and
@@ -276,10 +102,7 @@ def main() -> None:
     runs_done = 0
     for _ in range(runs):
         for name in HEADLINE:
-            fn = qs[name]
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples[name].append(round(time.time() - t0, 3))
+            samples[name].append(time_query(qs[name], spark, sf_dir))
         runs_done += 1
         if time.time() - bench_start > budget:
             break
@@ -292,7 +115,7 @@ def main() -> None:
     # stdout carries ONLY this line, and it must fit the driver's 2,000-byte
     # tail-capture window WHOLE (r3 and r4 both shipped `parsed: null`
     # because the per-query dict pushed the line's head past the window).
-    # ~120 bytes: summary fields only — the 139-entry per-query dict lives
+    # ~120 bytes: summary fields only — the per-query dict lives
     # exclusively in the sidecar.
     compact = {
         "metric": "headline_queries_total_sec",

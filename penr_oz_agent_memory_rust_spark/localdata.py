@@ -45,6 +45,18 @@ def local_df(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
         return spark.createDataFrame(rows, schema)
 
 
+def next_round(prev: DataFrame | None, nxt: DataFrame) -> DataFrame:
+    """One round of an iterative Spark loop: checkpoint `nxt` eagerly, then
+    release `prev`, the previous round's eager `localCheckpoint` (None on
+    the first round). Without the release, every round's blocks stay in
+    executor storage until the JVM collects the frames. Nothing may read
+    `prev` afterwards."""
+    out = nxt.localCheckpoint(eager=True)
+    if prev is not None:
+        prev._jdf.logicalPlan().rdd().unpersist(False)
+    return out
+
+
 def _size_probed(
     edges: DataFrame,
     local: Callable[[list], list],

@@ -118,9 +118,9 @@ def incremental_bloom_dedup(
     Pass `sketch` (from `build_bloom` over the history's 60-bit prefixes)
     to skip the build pass — the intended shape for a streaming ingest or
     a multi-batch backfill, where ONE history scan amortizes across every
-    batch and only the bit-OR of each batch's new fps updates it. The
-    scale_probe `span` section measures the split: the build is the
-    expensive pass; the per-batch probe+confirm is cheap.
+    batch and only the bit-OR of each batch's new fps updates it. PLANS.md
+    "Span/segment/Bloom probe" records the split at 2M docs: the build is
+    the expensive pass; the per-batch probe+confirm is cheap.
     """
     if sketch is None:
         seen_long = seen_fps.select(

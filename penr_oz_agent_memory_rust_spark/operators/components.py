@@ -22,7 +22,8 @@ probe of `localdata._size_probed` —
    parent and no parent is a child. Each parent is then its component's
    minimum. O(log² n) rounds, where min-label propagation needs
    O(diameter); each round is two window shuffles, one distinct and an
-   eager localCheckpoint (a persisted loop re-plans every earlier round).
+   eager localCheckpoint (a persisted loop re-plans every earlier round),
+   released once the next round's is written (`localdata.next_round`).
    A loop that reaches `MAX_ROUNDS` raises instead of returning partial
    labels.
 """
@@ -34,7 +35,7 @@ from collections import Counter
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import StructType
 
-from penr_oz_agent_memory_rust_spark.localdata import _size_probed
+from penr_oz_agent_memory_rust_spark.localdata import _size_probed, next_round
 
 # Cap on large-star/small-star rounds; read at call time. A 10k-node chain
 # converges in 14 rounds and a random 100k-node chain in 13.
@@ -76,7 +77,7 @@ def _star_components(src: DataFrame) -> DataFrame:
     u, v, m = F.col("u"), F.col("v"), F.col("m")
     by_u = Window.partitionBy("u")
     e = src.filter(u != v).select(F.greatest(u, v).alias("u"), F.least(u, v).alias("v"))
-    for _ in range(cap):
+    for i in range(cap):
         # large-star; the minimum is over all of u's neighbors, so the
         # filter to the neighbors above u comes after the window
         both = e.unionByName(e.select(v.alias("u"), u.alias("v")))
@@ -89,7 +90,8 @@ def _star_components(src: DataFrame) -> DataFrame:
         small = large.withColumn("m", F.min(v).over(by_u)).select(
             F.explode(F.array(F.struct(v.alias("u"), m.alias("v")), F.struct(u, m.alias("v"))))
         )
-        e = small.select("col.*").filter(u != v).distinct().localCheckpoint(eager=True)
+        # the first round reads the lazy input edges, not a checkpoint
+        e = next_round(e if i else None, small.select("col.*").filter(u != v).distinct())
         # star forest: a child with a second edge has two parents or is a
         # parent too
         roles = e.select(u.alias("n"), F.lit(1).alias("child")).unionByName(
@@ -101,10 +103,11 @@ def _star_components(src: DataFrame) -> DataFrame:
     else:
         raise RuntimeError(f"connected_components did not converge within MAX_ROUNDS={cap} rounds")
     nodes = src.select(u.alias("node")).union(src.select(v.alias("node"))).distinct()
-    return (
-        nodes.join(e.withColumnRenamed("u", "node"), "node", "left")
-        .select("node", F.coalesce(v, F.col("node")).alias("component"))
-        .localCheckpoint(eager=True)
+    return next_round(
+        e,
+        nodes.join(e.withColumnRenamed("u", "node"), "node", "left").select(
+            "node", F.coalesce(v, F.col("node")).alias("component")
+        ),
     )
 
 

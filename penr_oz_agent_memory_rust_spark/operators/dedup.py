@@ -908,7 +908,7 @@ def minhash_lsh_incremental(
             # cnt > max_bucket - b_max can matter. That is a LITERAL
             # predicate: it pushes down into the companion's parquet scan,
             # and with the companion written cnt-clustered (range-
-            # partitioned by cnt — scale_probe.py's incremental probe and
+            # partitioned by cnt — PLANS.md "Incremental LSH probe" and
             # examples/incremental_dedup_demo both write this layout)
             # row-group min/max stats skip everything but the heavy tail.
             # NOTE the clustering DECAYS under maintenance: merge_upsert

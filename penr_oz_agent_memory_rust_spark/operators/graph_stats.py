@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import StructType
 
-from penr_oz_agent_memory_rust_spark.localdata import _size_probed
+from penr_oz_agent_memory_rust_spark.localdata import _size_probed, next_round
 
 
 def undirected_edges(
@@ -275,11 +275,11 @@ def kcore(
     Input edges are treated as UNDIRECTED: the list is symmetrized and
     deduplicated first, so a kNN edge list (directed top-k) works as-is.
     Each peel is one degree aggregation + two semi-joins — node-sized
-    frames only; intermediate edge frames persist per round and unpersist
-    as soon as the next round materializes (the pagerank lineage-cut
-    pattern). Peeling is monotone (the survivor set only shrinks), so
-    `max_iters` peels compute exactly the fixpoint whenever convergence
-    happens earlier — which makes the operator oracle-mirrorable by a
+    frames only; each round's edge frame is an eager localCheckpoint,
+    released as soon as the next round's is written
+    (`localdata.next_round`). Peeling is monotone (the survivor set only
+    shrinks), so `max_iters` peels compute exactly the fixpoint whenever
+    convergence happens earlier — which makes the operator oracle-mirrorable by a
     fixed CTE unroll. Returns (id, degree) for the surviving core.
 
     Small graphs run the peel as a driver-local loop over the collected
@@ -318,10 +318,11 @@ def _distributed_kcore(sym: DataFrame, k: int, max_iters: int) -> DataFrame:
     for _ in range(max_iters):
         deg = cur.groupBy("src").agg(F.count("*").alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select(F.col("src").alias("id"))
-        cur = (
-            cur.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
-            .localCheckpoint(eager=True)
+        cur = next_round(
+            cur,
+            cur.join(keep.withColumnRenamed("id", "src"), "src", "left_semi").join(
+                keep.withColumnRenamed("id", "dst"), "dst", "left_semi"
+            ),
         )
         n_now = cur.count()
         if n_now == n_prev:

@@ -299,7 +299,8 @@ def blocked_knn_join(
     `query_block` bounds per-task memory: the score matrix is computed in
     (partition_rows × query_block) chunks, so a 1M-query all-pairs job
     allocates ~partition_rows*block*4 bytes per task instead of one giant
-    (n × Q) matrix — the scale_probe.py finding that motivated this.
+    (n × Q) matrix — the inflated-data probe finding in README "Scale
+    design notes" that motivated this.
 
     `max_broadcast_queries` is the guard rail on the driver collect: this
     strategy is for *bounded request batches*. Feeding it an unbounded
@@ -769,9 +770,8 @@ def lsh_knn_join_multiprobe(
     (table, bucket), distinct, re-score.
 
     Defaults (4 planes x 16 tables) come from the measured worst case
-    (`python scale_probe.py recall`, PLANS.md "Recall probe"): on the
-    near-uniform sf0.1 embeddings — minimal neighbor contrast, the
-    hardest regime for LSH — they reach recall@10 ~= 0.93, and
+    (PLANS.md "Recall probe"): on the near-uniform sf0.1 embeddings —
+    minimal neighbor contrast, the hardest regime for LSH — they reach recall@10 ~= 0.93, and
     (4, 24)/(4, 32) clear 0.95/0.99; clustered real-world embeddings
     need fewer tables for the same recall."""
     candidates = _lsh_bucket_join(

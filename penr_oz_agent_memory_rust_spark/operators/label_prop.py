@@ -19,7 +19,8 @@ persisted bidirectional edge list, one (node, label) vote count with
 map-side partial combine, one argmax agg (max of a (cnt, -label) struct —
 no window), one reassembly join. Edges shuffle ONCE at persist; lineage
 is cut by an EAGER localCheckpoint of the node-sized label frame every
-iteration — stricter than pagerank.py's every-few-iterations discipline
+iteration, released once the next one is written (`localdata.next_round`)
+— stricter than pagerank.py's every-few-iterations discipline
 because the label frame is consumed twice per iteration, which doubles
 the analyzed plan per iteration unless a barrier flattens it (see the
 comment in _distributed_label_prop).
@@ -30,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StructType
 
-from penr_oz_agent_memory_rust_spark.localdata import _size_probed
+from penr_oz_agent_memory_rust_spark.localdata import _size_probed, next_round
 
 
 def _local_label_prop(edge_rows, seed_rows, iters: int) -> list:
@@ -153,17 +154,16 @@ def _distributed_label_prop(
             .agg(F.max(F.struct(F.col("__cnt"), (-F.col("label")).alias("__neg"))).alias("m"))
             .select("id", (-F.col("m.__neg")).alias("__cand"))
         )
-        labels = (
+        labels = next_round(
+            labels,
             nodes.join(sd, "id", "left")
             .join(cand, "id", "left")
             .join(labels.withColumnRenamed("label", "__prev"), "id", "left")
             .select(
                 "id",
                 F.coalesce("__seed", "__cand", "__prev").alias("label"),
-            )
+            ),
         )
-        labels = labels.localCheckpoint(eager=True)
-    out = labels
     for df in (nodes, bidir):
         df.unpersist()
-    return out
+    return labels

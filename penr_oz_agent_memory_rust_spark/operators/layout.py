@@ -12,7 +12,7 @@ does; here it is plain columns + a sorted write, no table format needed.
 The Morton code is pure integer bit math (shift/and/or), evaluated
 inside whole-stage codegen and portable to the SQL oracle, so the
 transform itself is oracle-checkable; the layout effect (files pruned) is
-quantified in `scale_probe.py zorder`.
+quantified in PLANS.md "Z-order layout probe".
 """
 
 from __future__ import annotations

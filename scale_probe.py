@@ -1,9 +1,12 @@
-"""Scale probe: runs the scale-critical operators on synthetically inflated
-data (10-50× the sf0.1 tables, generated in a temp dir) to check that the
-plans behave at larger N — the local stand-in for the 100×/1000× question.
+"""Scale probes: the curation funnel and the top-cost operators on
+synthetic corpora large enough (100k-10M docs) that task time, not job
+scheduling, sets the wall time. Not part of the bench; run ad hoc:
 
-Not part of the driver's bench; run ad hoc:  python scale_probe.py
-Prints one JSON line with rows processed and per-op wall times.
+    python scale_probe.py funnel   # funnel_probe, SCALE_FUNNEL_DOCS docs
+    python scale_probe.py cores    # core_scaling_probe, SCALE_CORE_DOCS docs
+
+Each prints one JSON line per stage or operator as it finishes and one
+report line at the end. Results of earlier probes are recorded in PLANS.md.
 """
 
 from __future__ import annotations
@@ -18,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F
 
 import __spark_entry__ as _entry  # noqa: F401  (for _ship_package)
-from penr_oz_agent_memory_rust_spark.operators import dedup, knn
+from penr_oz_agent_memory_rust_spark.operators import dedup
 from penr_oz_agent_memory_rust_spark.session import get_spark as _get_spark
 
 
@@ -29,209 +32,12 @@ def get_spark(*a, **kw):
     _entry._ship_package(spark)
     return spark
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-EMB_COPIES = int(os.environ.get("SCALE_EMB_COPIES", "25"))  # 2k -> 50k vectors
-DOC_COPIES = int(os.environ.get("SCALE_DOC_COPIES", "10"))  # 5k -> 50k docs
-LI_COPIES = int(os.environ.get("SCALE_LI_COPIES", "10"))  # 600k -> 6M rows
-
-
-def inflate(df, copies: int, id_col: str, stride: int):
-    """Union `copies` shifted replicas — synthetic scale with distinct keys.
-    A small deterministic per-copy jitter column keeps vector replicas from
-    being byte-identical."""
-    parts = []
-    for c in range(copies):
-        parts.append(df.withColumn(id_col, F.col(id_col) + F.lit(c * stride)))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def recall_probe() -> None:
-    """Measure recall@k + runtime of the approximate ANN paths against
-    exact top-k on the sf0.1 embeddings (`python scale_probe.py recall`).
-    The grid answers "which (planes, tables, probes) settings clear 0.95
-    recall, and what does each cost" — results recorded in PLANS.md and
-    reflected in the operators' defaults."""
-    import shutil
-    import tempfile
-
-    from penr_oz_agent_memory_rust_spark.operators import ivf_index
-
-    spark = get_spark(app_name="poz-recall-probe")
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
-    n = emb.count()
-    k = 10
-    n_queries = 200
-    q = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-        .cache()
-    )
-    c = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
-    q.count()
-
-    exact = knn.expr_knn_join(
-        q, c, k=k, query_id="qid", query_vec="qv", corpus_id="cid", corpus_vec="cvec"
-    )
-    truth: dict[int, set] = {}
-    for r in exact.collect():
-        truth.setdefault(r["qid"], set()).add(r["cid"])
-
-    def recall_of(df, id_col="cid"):
-        hits = 0
-        for r in df.collect():
-            if r[id_col] in truth.get(r["qid"], ()):  # noqa: SIM401
-                hits += 1
-        return round(hits / (len(truth) * k), 4)
-
-    results = []
-    for planes, tables in [(4, 8), (4, 16), (4, 24), (4, 32), (5, 16), (6, 16)]:
-        t0 = time.time()
-        approx = knn.lsh_knn_join_multiprobe(
-            q, c, k=k, n_planes=planes, n_tables=tables,
-            query_id="qid", query_vec="qv", corpus_id="cid", corpus_vec="cvec",
-        )
-        rec = recall_of(approx)
-        results.append(
-            {
-                "op": "lsh_multiprobe",
-                "planes": planes,
-                "tables": tables,
-                "recall_at_10": rec,
-                "sec": round(time.time() - t0, 2),
-            }
-        )
-
-    for n_cents, probes_list in [(8, (2, 4, 6, 7)), (16, (4, 8, 12)), (32, (8,))]:
-        path = tempfile.mkdtemp(prefix="poz_recall_ivf_")
-        try:
-            t0 = time.time()
-            ivf_index.build_ivf_index(
-                emb, path, id_col="vec_id", vec_col="embedding",
-                n_centroids=n_cents, n_iters=5,
-            )
-            build_s = round(time.time() - t0, 2)
-            for probes in probes_list:
-                t0 = time.time()
-                approx = ivf_index.search_ivf_index_batch(
-                    spark, path, q, k=k, n_probes=probes,
-                    query_id="qid", query_vec="qv",
-                    id_col="vec_id", vec_col="embedding",
-                )
-                rec = recall_of(approx, id_col="vec_id")
-                results.append(
-                    {
-                        "op": "ivf",
-                        "centroids": n_cents,
-                        "probes": probes,
-                        "build_sec": build_s,
-                        "recall_at_10": rec,
-                        "sec": round(time.time() - t0, 2),
-                    }
-                )
-        finally:
-            shutil.rmtree(path, ignore_errors=True)
-
-    print(json.dumps({"corpus_rows": n, "queries": len(truth), "k": k, "grid": results}))
-    spark.stop()
-
-
-def pq_probe() -> None:
-    """PQ / IVF-PQ at inflated scale (`python scale_probe.py pq`):
-    encode throughput, on-disk compression, per-query search cost, and
-    recall@10 vs exact — the numbers behind the 'scan 32×-smaller code
-    rows' claim. Corpus = sf embeddings inflated EMB_COPIES× with
-    deterministic jitter (distinct vectors, same distribution)."""
-    import glob
-    import shutil
-    import tempfile
-
-    from penr_oz_agent_memory_rust_spark.operators import ivfpq, pq
-
-    spark = get_spark(app_name="poz-pq-probe")
-    base = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    stride = base.count()
-    emb = inflate(
-        base.withColumn(
-            "embedding",
-            F.transform(F.col("embedding"), lambda x: x + (F.crc32(F.col("vec_id").cast("string")) % 1000).cast("float") / 1e6),
-        ),
-        EMB_COPIES,
-        "vec_id",
-        stride,
-    ).cache()
-    n = emb.count()
-    n_queries = 20
-    qvs = {
-        r["vec_id"]: list(r["embedding"])
-        for r in emb.filter(F.col("vec_id") < n_queries).collect()
-    }
-    qdf = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-        .cache()
-    )
-    c = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
-    exact = knn.expr_knn_join(
-        qdf, c, k=10, query_id="qid", query_vec="qv", corpus_id="cid", corpus_vec="cvec"
-    )
-    truth: dict[int, set] = {}
-    for r in exact.collect():
-        truth.setdefault(r["qid"], set()).add(r["cid"])
-
-    out = {"corpus_rows": n, "queries": n_queries}
-    tmp = tempfile.mkdtemp(prefix="poz_pq_probe_")
-    try:
-        # --- plain PQ: train + encode + disk + search ---
-        t0 = time.time()
-        books = pq.train_pq_codebooks(emb, m=8, ksub=256, n_iters=5)
-        out["pq_train_sec"] = round(time.time() - t0, 2)
-        t0 = time.time()
-        codes_path = os.path.join(tmp, "codes.parquet")
-        pq.encode_pq(emb, books).write.mode("overwrite").parquet(codes_path)
-        enc_s = time.time() - t0
-        out["pq_encode_sec"] = round(enc_s, 2)
-        out["pq_encode_rows_per_sec"] = int(n / enc_s)
-        raw_path = os.path.join(tmp, "raw.parquet")
-        emb.select("vec_id", "embedding").write.mode("overwrite").parquet(raw_path)
-        size = lambda p: sum(os.path.getsize(f) for f in glob.glob(f"{p}/*.parquet"))
-        out["pq_disk_ratio"] = round(size(codes_path) / size(raw_path), 3)
-        codes = spark.read.parquet(codes_path).cache()
-        codes.count()
-        hits, t0 = 0, time.time()
-        for qid, qv in qvs.items():
-            got = pq.pq_search_rerank(codes, emb, books, qv, k=10, kprime=100)
-            hits += sum(1 for r in got.collect() if r["vec_id"] in truth.get(qid, ()))
-        out["pq_search_sec_per_query"] = round((time.time() - t0) / n_queries, 3)
-        out["pq_recall_at_10"] = round(hits / (n_queries * 10), 4)
-
-        # --- IVF-PQ: build + pruned search grid ---
-        idx = os.path.join(tmp, "ivfpq")
-        t0 = time.time()
-        ivfpq.build_ivfpq_index(emb, idx, n_cells=16, m=8, ksub=256, n_iters=5)
-        out["ivfpq_build_sec"] = round(time.time() - t0, 2)
-        for probes in (2, 4, 8):
-            hits, t0 = 0, time.time()
-            for qid, qv in qvs.items():
-                got = ivfpq.search_ivfpq_index(
-                    spark, idx, qv, k=10, n_probes=probes, kprime=100, rerank=emb
-                )
-                hits += sum(1 for r in got.collect() if r["vec_id"] in truth.get(qid, ()))
-            out[f"ivfpq_p{probes}_sec_per_query"] = round((time.time() - t0) / n_queries, 3)
-            out[f"ivfpq_p{probes}_recall_at_10"] = round(hits / (n_queries * 10), 4)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    print(json.dumps(out))
-    spark.stop()
-
 
 def _synth_skewed_corpus(spark, n_docs: int, words: int = 24):
-    """The shared 5M-doc synthetic corpus with skewed duplicates (all
-    synthesized in-plan, nothing collected): 0.5% boilerplate in 5
-    identical-text templates (~5k copies each at 5M), 20% near-dup
-    adjacent-id pairs differing by one word, 79.5% unique."""
+    """Synthetic corpus with skewed duplicates (all synthesized in-plan,
+    nothing collected): 0.5% boilerplate in 5 identical-text templates
+    (~5k copies each at 5M docs), 20% near-dup adjacent-id pairs differing
+    by one word, 79.5% unique."""
     base = spark.range(n_docs).select(F.col("id").alias("doc_id"))
     sel = F.pmod(F.col("doc_id"), F.lit(1000))
     fam = (
@@ -254,1314 +60,10 @@ def _synth_skewed_corpus(spark, n_docs: int, words: int = 24):
     return base.select("doc_id", F.concat(body, tail).alias("text"))
 
 
-def span_bloom_probe() -> None:
-    """Scale probe for the round-4 dedup additions (`python scale_probe.py
-    span`; SCALE_SPAN_DOCS overrides N, default 2M): the span/segment
-    operators' cost is linear in gram occurrences (no pair expansion to
-    cap), so the question here is raw throughput at corpus scale and —
-    for the Bloom incremental path — what fraction of the batch the
-    sketch routes AROUND the anti-join, which is the entire point of
-    shipping it. Results recorded in PLANS.md."""
-    n_docs = int(os.environ.get("SCALE_SPAN_DOCS", "2000000"))
-    spark = get_spark(app_name="poz-span-probe")
-    docs = _synth_skewed_corpus(spark, n_docs)
-    report: dict = {"n_docs": n_docs}
-
-    t0 = time.time()
-    cov = dedup.dup_span_coverage(docs, k=5, min_docs=2)
-    dup_docs = cov.filter(F.col("dup_frac") > 0).count()
-    report["dup_span_coverage"] = {
-        "docs_with_dup_spans": dup_docs,
-        "exec_sec": round(time.time() - t0, 2),
-    }
-
-    t0 = time.time()
-    seg = dedup.chunk_dedup(docs, chunk_tokens=8, stride=8)
-    trimmed = seg.filter(F.col("n_kept") < F.col("n_chunks")).count()
-    report["line_dedup"] = {
-        "docs_trimmed": trimmed,
-        "exec_sec": round(time.time() - t0, 2),
-    }
-
-    # Bloom-prefiltered incremental dedup with the ASYMMETRY that motivates
-    # the sketch: 95% of the corpus is already-ingested history, 5% is the
-    # incoming batch. The exact path's anti-join shuffles the whole history
-    # fp table per batch; the bloom path probes only the batch against a
-    # constant-size broadcast sketch and joins the hit sliver — so the
-    # crossover arrives as history/batch grows. Report the routing split
-    # and the build-vs-per-batch cost separately (the build amortizes
-    # across every batch of a backfill or stream).
-    from penr_oz_agent_memory_rust_spark.operators import bloom as bloom_mod
-    from penr_oz_agent_memory_rust_spark.functions import hashing as _h
-
-    half = (n_docs * 19) // 20
-    seen = (
-        docs.filter(F.col("doc_id") < half)
-        .select(_h.fingerprint(F.col("text")).alias("fp"))
-        .distinct()
-        .persist()
-    )
-    batch = docs.filter(F.col("doc_id") >= half)
-    n_seen = seen.count()
-    m_bits = bloom_mod.optimal_bits(n_seen, fpp=0.01)
-    t0 = time.time()
-    sketch = bloom_mod.build_bloom(
-        seen.select(
-            F.conv(F.substring(F.col("fp"), 1, 15), 16, 10).cast("bigint").alias("fpl")
-        ),
-        "fpl",
-        m_bits=m_bits,
-    )
-    t_build = round(time.time() - t0, 2)
-    t0 = time.time()
-    out_bloom = bloom_mod.incremental_bloom_dedup(
-        batch, seen, m_bits=m_bits, sketch=sketch
-    ).count()
-    t_batch = round(time.time() - t0, 2)
-    t0 = time.time()
-    out_exact = dedup.incremental_exact_dedup(batch, seen).count()
-    t_exact = round(time.time() - t0, 2)
-    probe = bloom_mod.bloom_probe_udf(batch, sketch, m_bits, 4)
-    batch_fps = batch.select(
-        F.conv(F.substring(_h.fingerprint(F.col("text")), 1, 15), 16, 10)
-        .cast("bigint")
-        .alias("fpl")
-    )
-    hits = batch_fps.filter(probe(F.col("fpl"))).count()
-    total = batch_fps.count()
-    seen.unpersist()
-    report["bloom_incremental"] = {
-        "history_fps": n_seen,
-        "sketch_kib": m_bits // 8192,
-        "batch_rows": total,
-        "bloom_hits_join_rows": hits,
-        "join_bypass_frac": round(1 - hits / max(total, 1), 4),
-        "rows_out_bloom": out_bloom,
-        "rows_out_exact": out_exact,
-        "agree": out_bloom == out_exact,
-        "sketch_build_sec": t_build,
-        "per_batch_sec_bloom": t_batch,
-        "per_batch_sec_exact": t_exact,
-    }
-    print(json.dumps(report))
-    spark.stop()
-
-
-def dedup_caps_probe() -> None:
-    """Quantify what the stop-bucket / stop-shingle caps buy on a 5M-doc
-    synthetic corpus with skewed duplicates (`python scale_probe.py dedup`;
-    SCALE_DEDUP_DOCS overrides N). This is the 100 TB question for the
-    dedup family: a few boilerplate templates with huge copy counts make
-    candidate generation quadratic in the hottest bucket, and the caps are
-    the only thing standing between the plan and a |bucket|^2 blowup.
-
-    Corpus shape (all synthesized in-plan, nothing collected):
-      - 0.5% boilerplate: 5 templates, identical text per template
-        (~5k copies each at 5M docs) — the degenerate hot clusters.
-      - 20% near-dup pairs: adjacent ids share all but one word.
-      - 79.5% unique: words derived from the doc id.
-
-    The UNCAPPED candidate-pair cost is computed analytically as
-    sum(C(size, 2)) over band buckets / shingle posting lists — running it
-    would BE the blowup. The CAPPED pipelines execute for real and report
-    wall time + output rows. Results recorded in PLANS.md.
-    """
-    n_docs = int(os.environ.get("SCALE_DEDUP_DOCS", "5000000"))
-    words = 24
-    spark = get_spark(app_name="poz-dedup-probe")
-    docs = _synth_skewed_corpus(spark, n_docs, words)
-
-    report: dict = {"n_docs": n_docs, "words_per_doc": words}
-    pair_cost = (F.col("sz") * (F.col("sz") - 1) / 2).cast("double")
-
-    # ---- minhash LSH band buckets ----
-    cap = 100
-    members = dedup.minhash_band_members(docs, "doc_id", "text").select(
-        F.size("ids").alias("sz")
-    ).persist()
-    stats = members.agg(
-        F.count("*").alias("buckets"),
-        F.max("sz").alias("max_bucket_size"),
-        F.sum(pair_cost).alias("cost_uncapped"),
-        F.sum(F.when(F.col("sz") <= cap, pair_cost).otherwise(F.lit(0.0))).alias("cost_capped"),
-    ).first()
-    members.unpersist()
-    t0 = time.time()
-    capped_pairs = dedup.minhash_lsh_pairs(docs, max_bucket=cap).count()
-    report["minhash"] = {
-        "cap": cap,
-        "buckets_gt1": stats["buckets"],
-        "max_bucket_size": stats["max_bucket_size"],
-        "cand_pair_cost_uncapped": int(stats["cost_uncapped"]),
-        "cand_pair_cost_capped": int(stats["cost_capped"]),
-        "capped_pairs_out": capped_pairs,
-        "capped_exec_sec": round(time.time() - t0, 2),
-    }
-
-    # ---- n-gram inverted-index posting lists ----
-    from penr_oz_agent_memory_rust_spark.functions import hashing
-
-    dfreq_cap = 50
-    sh = hashing.word_shingle_rows(docs, "doc_id", "text", 3)
-    dfreq = sh.groupBy("sh").agg(F.count("*").alias("sz"))
-    nstats = dfreq.agg(
-        F.count("*").alias("shingles"),
-        F.max("sz").alias("max_doc_freq"),
-        F.sum(pair_cost).alias("cost_uncapped"),
-        F.sum(F.when(F.col("sz") <= dfreq_cap, pair_cost).otherwise(F.lit(0.0))).alias("cost_capped"),
-        F.sum(F.when(F.col("sz") > dfreq_cap, 1).otherwise(0)).alias("hot_shingles"),
-    ).first()
-    t0 = time.time()
-    ngram_pairs = dedup.ngram_jaccard_pairs(
-        docs, n=3, threshold=0.5, max_doc_freq=dfreq_cap
-    ).count()
-    report["ngram"] = {
-        "cap_doc_freq": dfreq_cap,
-        "distinct_shingles": nstats["shingles"],
-        "max_doc_freq": nstats["max_doc_freq"],
-        "hot_shingles_dropped": int(nstats["hot_shingles"]),
-        "join_cost_uncapped": int(nstats["cost_uncapped"]),
-        "join_cost_capped": int(nstats["cost_capped"]),
-        "capped_pairs_out": ngram_pairs,
-        "capped_exec_sec": round(time.time() - t0, 2),
-    }
-
-    # exact dedup sweeps up what the stop-shingle cap excludes (boilerplate
-    # is byte-identical): prove the division of labor on the same corpus
-    t0 = time.time()
-    exact_groups = dedup.exact_dedup(docs).filter(F.col("dup_count") > 1).count()
-    report["exact"] = {"dup_groups": exact_groups, "exec_sec": round(time.time() - t0, 2)}
-
-    print(json.dumps(report))
-    spark.stop()
-
-
-def incr_dedup_probe() -> None:
-    """Incremental LSH dedup at a growing stored index (`python
-    scale_probe.py incr`; SCALE_INCR_BATCH overrides the batch size).
-
-    The 100 TB question the r6 judge raised: with max_bucket set, the hot
-    list used to recount buckets over index ∪ batch — an O(corpus) scan
-    per daily batch that defeats the operator's own cost model. With the
-    stored (bucket, cnt) companion (lsh_bucket_counts, maintained by
-    merge_bucket_counts on the append path), the hot list derives from a
-    bucket-count-sized table instead. This probe holds the BATCH fixed
-    and grows the stored index 10×, timing both paths end-to-end with the
-    index and counts read back from parquet (the stored-table shape, as
-    in examples/incremental_dedup_demo.py):
-
-      - recount path: must grow with the index (it re-aggregates it);
-      - counts path: the hot list is a broadcast join of the batch's
-        buckets against the stored companion (map-side scan, no shuffle,
-        no aggregation) — wall time stays near-flat.
-
-    Both end-to-end wall times AND the isolated hot-list derivation (the
-    exact stage the judge flagged) are reported. Results recorded in
-    PLANS.md ("Incremental LSH probe").
-    """
-    batch_n = int(os.environ.get("SCALE_INCR_BATCH", "20000"))
-    spark = get_spark(app_name="poz-incr-dedup-probe")
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="incrprobe-")
-    report: dict = {"batch_docs": batch_n, "max_bucket": 100, "sizes": []}
-    batch = _synth_skewed_corpus(spark, batch_n).withColumn(
-        "doc_id", F.col("doc_id") + F.lit(1_000_000_000)
-    )
-    batch = batch.repartition(32).persist()
-    batch.count()
-    nb = dedup.lsh_band_rows(batch).localCheckpoint(eager=True)
-    for idx_n in (500_000, 5_000_000):
-        bands_path = os.path.join(root, f"bands_{idx_n}")
-        counts_path = os.path.join(root, f"counts_{idx_n}")
-        idx_bands = dedup.lsh_band_rows(_synth_skewed_corpus(spark, idx_n))
-        idx_bands.write.mode("overwrite").parquet(bands_path)
-        stored = spark.read.parquet(bands_path)
-        # cnt-clustered companion layout: range-partitioning by cnt gives
-        # every file/row-group a tight [min,max] on cnt, so the operator's
-        # heavy-tail predicate (cnt > max_bucket - b_max) skips all but
-        # the heavy files at scan time
-        dedup.lsh_bucket_counts(stored).repartitionByRange(
-            32, F.col("cnt")
-        ).write.mode("overwrite").parquet(counts_path)
-        stored_counts = spark.read.parquet(counts_path)
-
-        # isolated hot-list derivation: recount aggregates index ∪ batch;
-        # the companion path broadcast-joins the batch's bucket counts
-        # against the pushdown-pruned heavy tail
-        t0 = time.time()
-        hot_recount = (
-            stored.select("bucket").unionByName(nb.select("bucket"))
-            .groupBy("bucket").count().filter(F.col("count") > 100).count()
-        )
-        hot_recount_sec = round(time.time() - t0, 2)
-        bc = dedup.lsh_bucket_counts(nb).withColumnRenamed("cnt", "bcnt")
-        t0 = time.time()
-        b_max = bc.agg(F.max("bcnt")).first()[0] or 0
-        hot_counts = (
-            stored_counts.filter(F.col("cnt") > 100 - b_max)
-            .join(F.broadcast(bc), "bucket")
-            .filter(F.col("cnt") + F.col("bcnt") > 100)
-            .select("bucket")
-            .unionByName(bc.filter(F.col("bcnt") > 100).select("bucket"))
-            .distinct()
-            .count()
-        )
-        hot_counts_sec = round(time.time() - t0, 2)
-
-        t0 = time.time()
-        n_recount = dedup.minhash_lsh_incremental(
-            batch, stored, max_bucket=100
-        ).count()
-        recount_sec = round(time.time() - t0, 2)
-        t0 = time.time()
-        n_counts = dedup.minhash_lsh_incremental(
-            batch, stored, max_bucket=100, index_counts=stored_counts
-        ).count()
-        counts_sec = round(time.time() - t0, 2)
-        assert n_counts == n_recount, (n_counts, n_recount)
-        report["sizes"].append(
-            {
-                "index_docs": idx_n,
-                "index_band_rows": stored.count(),
-                "pairs": n_counts,
-                "hot_buckets_recount": hot_recount,
-                "hot_buckets_touched": hot_counts,
-                "hot_recount_sec": hot_recount_sec,
-                "hot_counts_sec": hot_counts_sec,
-                "recount_sec": recount_sec,
-                "counts_sec": counts_sec,
-            }
-        )
-    batch.unpersist()
-    print(json.dumps(report))
-    spark.stop()
-
-
-def cdf_resync_probe() -> None:
-    """Change-feed recovery cost at 8M rows (`python scale_probe.py
-    cdf_resync`; SCALE_CDF_ROWS overrides N): what does on_gap="resync"
-    actually cost vs an incremental catch-up, and what must the consumer
-    do with it?
-
-    The consumer CONTRACT (streaming/ingest.follow_versioned_changes):
-    an incremental call hands apply_fn only the span's change rows — the
-    consumer may apply them as deltas. A RESYNC call hands the FULL
-    current snapshot as inserts with from_v=None — the consumer must
-    treat it as "drop derived state and rebuild" (truncate-and-load /
-    idempotent upsert), never as additive inserts, or rows deleted
-    during the vacuumed gap survive in the derived state forever.
-
-    Probe: an 8M-row versioned table takes three 50k-row delta commits.
-    Consumer `inc` catches up incrementally (receives 150k change rows);
-    then vacuum drops history and consumer `lag` (watermark at genesis)
-    must resync (receives the full 8.15M-row snapshot). Recorded in
-    PLANS.md ("CDF resync probe") — the ratio is the price of letting a
-    consumer lag past retention, and why the default is to ERROR."""
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from penr_oz_agent_memory_rust_spark.sources.versioned_tables import (
-        VersionedParquetTable,
-    )
-    from penr_oz_agent_memory_rust_spark.streaming.ingest import (
-        follow_versioned_changes,
-    )
-
-    n_rows = int(os.environ.get("SCALE_CDF_ROWS", "8000000"))
-    spark = get_spark(app_name="poz-cdf-resync-probe")
-    sch = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("v", T.LongType())]
-    )
-    root = tempfile.mkdtemp(prefix="cdfresync-")
-    t = VersionedParquetTable(spark, os.path.join(root, "base"), sch)
-    t.append(spark.range(n_rows).selectExpr("id", "id % 997 AS v"))
-    genesis_done = t.current_version()
-    # pin both consumers' watermarks at the post-genesis version
-    for cid in ("inc", "lag"):
-        follow_versioned_changes(t, cid, lambda df, a, b: df.count())
-    report: dict = {"base_rows": n_rows}
-    for i in range(3):
-        t.append(
-            spark.range(50_000).selectExpr(
-                f"id + {n_rows + i * 50_000} AS id", "id % 31 AS v"
-            )
-        )
-    t0 = time.time()
-    got: dict = {}
-
-    def apply_count(df, from_v, to_v):
-        got["rows"] = df.count()
-        got["from_v"] = from_v
-
-    follow_versioned_changes(t, "inc", apply_count)
-    report["incremental"] = {
-        "delta_commits": 3,
-        "change_rows": got["rows"],
-        "from_v": got["from_v"],
-        "sec": round(time.time() - t0, 2),
-    }
-    # vacuum away the history the lagging consumer needs
-    t.vacuum(keep_last=1)
-    try:
-        follow_versioned_changes(t, "lag", apply_count)
-        raise AssertionError("expected ChangeFeedGapError")
-    except Exception as e:  # noqa: BLE001
-        report["gap_error"] = type(e).__name__
-    t0 = time.time()
-    follow_versioned_changes(t, "lag", apply_count, on_gap="resync")
-    report["resync"] = {
-        "snapshot_rows": got["rows"],
-        "from_v_is_none": got["from_v"] is None,
-        "sec": round(time.time() - t0, 2),
-    }
-    report["resync_vs_incremental_rows"] = round(
-        report["resync"]["snapshot_rows"] / max(1, report["incremental"]["change_rows"]), 1
-    )
-    report["genesis_version"] = genesis_done
-    print(json.dumps(report))
-    spark.stop()
-
-
-def pca_probe() -> None:
-    """PCA probes (`python scale_probe.py pca`):
-
-    1. Candidate recall: does a LEARNED 64→16 projection generate better
-       ANN candidates than the data-oblivious JL projection at the same
-       dims? Both project corpus+queries, brute-force top-20 in the small
-       space, and score recall@10 of that candidate set against exact
-       top-10 in the original space (the re-rank stage then recovers exact
-       order for whatever the candidates contain).
-    2. Scale shape: gramian + fit on 100k synthetic 256-dim vectors —
-       wall time and the driver-side state (d^2 + d + 1 rows), which must
-       stay metadata-sized regardless of corpus rows.
-    """
-    from penr_oz_agent_memory_rust_spark.operators import pca, projection
-
-    spark = get_spark(app_name="poz-pca-probe")
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
-    n = emb.count()
-    k, n_queries, cand_k = 10, 200, 20
-    q = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-        .cache()
-    )
-    c = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
-    exact = knn.expr_knn_join(
-        q, c, k=k, query_id="qid", query_vec="qv", corpus_id="cid", corpus_vec="cvec"
-    )
-    truth: dict[int, set] = {}
-    for r in exact.collect():
-        truth.setdefault(r["qid"], set()).add(r["cid"])
-
-    def cand_recall(proj_df, out_col):
-        pq_ = proj_df.filter(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("qid"), F.col(out_col).alias("qv")
-        )
-        pc = proj_df.select(F.col("vec_id").alias("cid"), F.col(out_col).alias("cvec"))
-        cand = knn.expr_knn_join(
-            pq_, pc, k=cand_k, precision="f32",
-            query_id="qid", query_vec="qv", corpus_id="cid", corpus_vec="cvec",
-        )
-        hits = 0
-        for r in cand.collect():
-            if r["cid"] in truth.get(r["qid"], ()):  # noqa: SIM401
-                hits += 1
-        return round(hits / (len(truth) * k), 4)
-
-    results = []
-    for out_dim in (8, 16, 24):
-        t0 = time.time()
-        model = pca.fit_pca(emb, n_components=out_dim)
-        pdf = pca.pca_project(emb.select("vec_id", "embedding"), model)
-        rec = cand_recall(pdf, "pvec")
-        results.append(
-            {"proj": "pca", "dim": out_dim, "cand_recall_at_10": rec,
-             "sec": round(time.time() - t0, 2)}
-        )
-        t0 = time.time()
-        jdf = projection.project_embeddings(emb.select("vec_id", "embedding"), out_dim)
-        rec = cand_recall(jdf, "proj")
-        results.append(
-            {"proj": "jl", "dim": out_dim, "cand_recall_at_10": rec,
-             "sec": round(time.time() - t0, 2)}
-        )
-
-    # 100k x 256-dim synthetic vectors, generated JVM-side (hash-based
-    # pseudo-randoms) so the probe measures the stats pass, not data gen
-    big = spark.range(100_000).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(256)),
-            lambda j: (F.pmod(F.hash(F.col("id"), j), F.lit(1000)) / 1000.0 - 0.5).cast("float"),
-        ).alias("embedding"),
-    ).cache()
-    big.count()
-    t0 = time.time()
-    g_rows = pca.gramian_rows(big).count()
-    g_sec = round(time.time() - t0, 2)
-    t0 = time.time()
-    model = pca.fit_pca(big, n_components=32)
-    fit_sec = round(time.time() - t0, 2)
-    print(json.dumps({
-        "corpus_rows": n, "queries": len(truth), "cand_k": cand_k, "grid": results,
-        "big_rows": 100_000, "big_dim": 256, "gramian_rows": g_rows,
-        "gramian_sec": g_sec, "fit_sec": fit_sec,
-        "driver_state_rows": 256 * 256 + 256 + 1,
-        "explained_var_top4": [round(float(v), 4) for v in model.explained_variance[:4]],
-    }))
-    spark.stop()
-
-
-def graph_probe() -> None:
-    """Triangle counting at graph scale: a skewed (hub-heavy) synthetic
-    graph quantifies what degree-ordered wedge enumeration saves vs the
-    naive orientation. Prints wedge counts (the candidate volume of the
-    quadratic stage) and wall time for the full operator.
-
-    Run: python scale_probe.py graph
-    """
-    from penr_oz_agent_memory_rust_spark.operators.graph_stats import (
-        triangle_stats,
-        undirected_edges,
-    )
-
-    spark = get_spark(app_name="poz-graph-probe")
-    for n_nodes, n_edges in ((100_000, 1_000_000), (300_000, 3_000_000)):
-        # skewed dst: quadratic transform of a uniform hash -> hub nodes
-        e = spark.range(n_edges).select(
-            (F.col("id") % n_nodes).alias("src"),
-            (
-                F.floor(
-                    F.pow(
-                        (F.hash(F.col("id")).cast("double") / 2147483647.0 + 1.0)
-                        / 2.0,
-                        F.lit(3.0),
-                    )
-                    * n_nodes
-                ).cast("bigint")
-            ).alias("dst"),
-        )
-        und = undirected_edges(e).persist()
-        m = und.count()
-        deg = (
-            und.select(F.col("a").alias("id"))
-            .unionByName(und.select(F.col("b").alias("id")))
-            .groupBy("id")
-            .agg(F.count("*").alias("d"))
-        )
-        naive_wedges = deg.agg(
-            F.sum(F.col("d") * (F.col("d") - 1) / 2).cast("bigint")
-        ).collect()[0][0]
-        dmax = deg.agg(F.max("d")).collect()[0][0]
-        t0 = time.time()
-        out = triangle_stats(und, "a", "b")
-        tri_total = out.agg(F.sum("triangles")).collect()[0][0] // 3
-        wall = round(time.time() - t0, 2)
-        # oriented wedge volume = what the operator actually joins
-        print(
-            json.dumps(
-                {
-                    "probe": "graph_triangles",
-                    "nodes": n_nodes,
-                    "und_edges": m,
-                    "max_degree": dmax,
-                    "naive_wedges": int(naive_wedges),
-                    "triangles": int(tri_total),
-                    "wall_sec": wall,
-                }
-            )
-        )
-        und.unpersist()
-    # k-core peel on the largest skewed graph: iterative cost per round at
-    # a realistic hub-heavy degree distribution (each round = one degree
-    # agg + two semi-joins + a lineage cut)
-    from penr_oz_agent_memory_rust_spark.operators.graph_stats import kcore
-
-    n_nodes, n_edges = 300_000, 3_000_000
-    e = spark.range(n_edges).select(
-        (F.col("id") % n_nodes).alias("src"),
-        (
-            F.floor(
-                F.pow(
-                    (F.hash(F.col("id")).cast("double") / 2147483647.0 + 1.0) / 2.0,
-                    F.lit(3.0),
-                )
-                * n_nodes
-            ).cast("bigint")
-        ).alias("dst"),
-    )
-    for k in (12, 14):
-        t0 = time.time()
-        core = kcore(e, k=k, max_iters=30)
-        n_core = core.count()
-        print(
-            json.dumps(
-                {
-                    "probe": "kcore",
-                    "nodes": n_nodes,
-                    "edges": n_edges,
-                    "k": k,
-                    "core_nodes": n_core,
-                    "wall_sec": round(time.time() - t0, 2),
-                }
-            )
-        )
-    spark.stop()
-
-
-def linkage_probe() -> None:
-    """Fuzzy-linkage candidate volume with and without the stop-block cap
-    on a skewed synthetic name table (one degenerate block holding 5% of
-    all rows — the 'Smith' problem).
-
-    Run: python scale_probe.py linkage
-    """
-    from penr_oz_agent_memory_rust_spark.operators import linkage
-
-    spark = get_spark(app_name="poz-linkage-probe")
-    n = 2_000_000
-    names = spark.range(n).select(
-        F.col("id"),
-        F.concat(
-            F.lit("name"),
-            (F.col("id") % 997).cast("string"),
-            F.lit(" "),
-            # 5% of rows land in one degenerate family
-            F.when(F.col("id") % 20 == 0, F.lit("smith")).otherwise(
-                F.concat(F.lit("fam"), (F.hash("id") % 5000).cast("string"))
-            ),
-        ).alias("name"),
-    )
-    # the UNCAPPED candidate volume is computed analytically from block
-    # sizes (sum of C(bn, 2)) — actually executing it would evaluate
-    # billions of levenshtein pairs, which is precisely what the cap
-    # exists to prevent
-    from penr_oz_agent_memory_rust_spark.operators.linkage import block_key
-
-    sizes = names.select(block_key(F.col("name")).alias("b")).groupBy("b").count()
-    uncapped = sizes.agg(
-        F.sum(F.col("count") * (F.col("count") - 1) / 2).cast("bigint")
-    ).collect()[0][0]
-    biggest = sizes.agg(F.max("count")).collect()[0][0]
-    print(
-        json.dumps(
-            {
-                "probe": "fuzzy_linkage",
-                "rows": n,
-                "max_block": None,
-                "candidate_pairs_analytic": int(uncapped),
-                "largest_block": int(biggest),
-                "executed": False,
-            }
-        )
-    )
-    t0 = time.time()
-    cnt = linkage.fuzzy_pairs(
-        names, "id", "name", max_distance=2, max_block=1000
-    ).count()
-    print(
-        json.dumps(
-            {
-                "probe": "fuzzy_linkage",
-                "rows": n,
-                "max_block": 1000,
-                "pairs": cnt,
-                "wall_sec": round(time.time() - t0, 2),
-                "executed": True,
-            }
-        )
-    )
-    spark.stop()
-
-
-def cdc_probe() -> None:
-    """Content-defined chunking at corpus scale: 1M synthetic ~600-char
-    docs (600M positions hashed). Reports boundary density vs the 1/64
-    theory, chunk-length stats, and wall time — plus the re-sync property
-    measured in bulk: every doc duplicated with a prefix edit, fraction of
-    chunk fingerprints shared between original and edited copy.
-
-    Run: python scale_probe.py cdc
-    """
-    from penr_oz_agent_memory_rust_spark.operators.text_ops import (
-        cdc_chunk_documents,
-    )
-
-    spark = get_spark(app_name="poz-cdc-probe")
-    n = 1_000_000
-    words = F.expr(
-        "array_join(transform(sequence(1, 100), "
-        "i -> concat('w', cast(abs(hash(id, i)) % 5000 as string))), ' ')"
-    )
-    docs = spark.range(n).select(F.col("id").alias("doc_id"), words.alias("text"))
-    t0 = time.time()
-    chunks = cdc_chunk_documents(docs, gram=8, modulus=64)
-    stats = chunks.agg(
-        F.count("*").alias("chunks"),
-        F.round(F.avg("chunk_len"), 2).alias("avg_len"),
-        F.round(F.expr("percentile(chunk_len, 0.95)"), 1).alias("p95_len"),
-    ).collect()[0]
-    wall = round(time.time() - t0, 2)
-    print(
-        json.dumps(
-            {
-                "probe": "cdc_chunking",
-                "docs": n,
-                "chunks": stats.chunks,
-                "avg_len": stats.avg_len,
-                "p95_len": stats.p95_len,
-                "theory_len": 64,
-                "wall_sec": wall,
-            }
-        )
-    )
-    # re-sync in bulk: 100k docs + their prefix-edited copies
-    m = 100_000
-    base = spark.range(m).select(F.col("id").alias("doc_id"), words.alias("text"))
-    edited = base.select(
-        (F.col("doc_id") + m).alias("doc_id"),
-        F.concat(F.lit("inserted prefix paragraph "), F.col("text")).alias("text"),
-    )
-    both = cdc_chunk_documents(base.unionByName(edited), gram=8, modulus=64)
-    orig = both.filter(F.col("doc_id") < m).select(
-        F.col("doc_id").alias("k"), "chunk_fp"
-    )
-    edit = both.filter(F.col("doc_id") >= m).select(
-        (F.col("doc_id") - m).alias("k"), F.col("chunk_fp").alias("fp2")
-    )
-    shared = orig.join(edit, (orig.k == edit.k) & (orig.chunk_fp == edit.fp2)).count()
-    total = orig.count()
-    print(
-        json.dumps(
-            {
-                "probe": "cdc_resync",
-                "docs": m,
-                "orig_chunks": total,
-                "shared_after_prefix_edit": shared,
-                "shared_frac": round(shared / total, 4),
-            }
-        )
-    )
-    spark.stop()
-
-
-def zorder_probe() -> None:
-    """Data-layout probe (`python scale_probe.py zorder`): quantify what
-    Z-order clustering buys for two-dimensional data skipping at a few
-    million rows.
-
-    Writes the same 6M-row synthetic table three ways — unclustered (hash
-    partitions), sorted by dim `a` alone, and Z-ordered on (a, b) via
-    `operators/layout.write_zordered` — then for a box predicate
-    `a IN [0,tile) AND b IN [0,tile)`:
-
-    - counts output files whose parquet footer min-max stats can match the
-      box on BOTH dims (the fraction of the table a stats-pruning reader
-      must fetch — the 100 TB cost model, where every non-pruned file is a
-      network read), and
-    - times the actual filtered Spark scan over each layout.
-
-    Expected shape: single-dim sort prunes on `a` only (~tile/range of
-    files but every one matching on b's full range would also pass a b-only
-    predicate); Z-order confines the box to the few files whose z-range
-    rectangle intersects it, on either predicate alone as well as both.
-    """
-    import glob
-    import shutil
-    import tempfile
-
-    import pyarrow.parquet as pq
-
-    from penr_oz_agent_memory_rust_spark.operators.layout import write_zordered
-
-    spark = get_spark(app_name="poz-zorder-probe")
-    n = int(os.environ.get("SCALE_Z_ROWS", "6000000"))
-    side = 4096  # key space: (a, b) uniform in [0, side)^2
-    tile = 256  # box predicate edge: 1/16 of each dim -> 1/256 of the area
-    n_files = 64
-
-    base = (
-        spark.range(n)
-        .select(
-            F.col("id"),
-            # decorrelated pseudo-uniform dims (multiplicative hashing)
-            ((F.col("id") * 2654435761) % side).alias("a"),
-            ((F.col("id") * 40503 + 2531011) % side).alias("b"),
-            (F.rand(7) * 100).alias("payload"),
-        )
-    )
-    tmp = tempfile.mkdtemp(prefix="poz_zorder_")
-    layouts = {}
-    t_write = {}
-    try:
-        t0 = time.time()
-        base.repartition(n_files).write.mode("overwrite").parquet(f"{tmp}/plain")
-        t_write["plain"] = round(time.time() - t0, 2)
-        t0 = time.time()
-        (
-            base.repartitionByRange(n_files, "a")
-            .sortWithinPartitions("a")
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/sort_a")
-        )
-        t_write["sort_a"] = round(time.time() - t0, 2)
-        t0 = time.time()
-        write_zordered(base, f"{tmp}/zorder", "a", "b", n_files=n_files, bits=12)
-        t_write["zorder"] = round(time.time() - t0, 2)
-
-        def files_matching(path: str, a_only: bool = False) -> tuple[int, int]:
-            """(files whose footer stats can match the box, total files)."""
-            fs = glob.glob(f"{path}/*.parquet")
-            hit = 0
-            for f in fs:
-                md = pq.read_metadata(f)
-                names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-                ai, bi = names["a"], names["b"]
-                ok = False
-                for g in range(md.num_row_groups):
-                    sa = md.row_group(g).column(ai).statistics
-                    sb = md.row_group(g).column(bi).statistics
-                    in_a = sa.min < tile
-                    in_b = sb.min < tile
-                    if in_a and (a_only or in_b):
-                        ok = True
-                        break
-                hit += ok
-            return hit, len(fs)
-
-        stats = {}
-        scan_t = {}
-        scan_rows = {}
-        for name in ("plain", "sort_a", "zorder"):
-            path = f"{tmp}/{name}"
-            stats[name] = {
-                "files_matching_box": files_matching(path)[0],
-                "files_matching_a_only": files_matching(path, a_only=True)[0],
-                "files_total": files_matching(path)[1],
-            }
-            t0 = time.time()
-            scan_rows[name] = (
-                spark.read.parquet(path)
-                .filter((F.col("a") < tile) & (F.col("b") < tile))
-                .count()
-            )
-            scan_t[name] = round(time.time() - t0, 2)
-
-        print(
-            json.dumps(
-                {
-                    "rows": n,
-                    "box": f"a<{tile} AND b<{tile} of [0,{side})^2",
-                    "layout_stats": stats,
-                    "scan_sec": scan_t,
-                    "scan_rows": scan_rows,
-                    "write_sec": t_write,
-                }
-            )
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-        spark.stop()
-
-
-def binq_probe() -> None:
-    """Binary-quantization probe (`python scale_probe.py binq`): does the
-    1-bit Hamming path actually buy its 32× at a few hundred thousand
-    vectors, and what recall does the sign sketch keep?
-
-    Synthesizes N distinct 64-dim vectors, writes the float table and the
-    packed table, then over Q query vectors measures:
-    - parquet bytes on disk (float32 list vs 2 packed bigints per row);
-    - per-query latency: exact f64 expr cosine top-10 over the float scan
-      vs Hamming top-10 over the packed scan vs Hamming top-40 + exact
-      rerank (the serving shape);
-    - candidate recall@10 of the 4× over-fetch vs the exact top-10.
-    """
-    import glob
-    import shutil
-    import tempfile
-
-    from penr_oz_agent_memory_rust_spark.operators import quantize
-    from penr_oz_agent_memory_rust_spark.operators import knn as knn_ops
-
-    spark = get_spark(app_name="poz-binq-probe")
-    n = int(os.environ.get("SCALE_BINQ_ROWS", "200000"))
-    n_queries = int(os.environ.get("SCALE_BINQ_QUERIES", "8"))
-    vecs = (
-        spark.range(n)
-        .select(
-            F.col("id").alias("vec_id"),
-            F.expr(
-                "transform(sequence(1, 64), i -> cast(sin(id * i + i) as float))"
-            ).alias("embedding"),
-        )
-    )
-    tmp = tempfile.mkdtemp(prefix="poz_binq_")
-    try:
-        vecs.write.mode("overwrite").parquet(f"{tmp}/full")
-        full = spark.read.parquet(f"{tmp}/full")
-        quantize.binarize_table(full, dim=64).write.mode("overwrite").parquet(f"{tmp}/packed")
-        packed = spark.read.parquet(f"{tmp}/packed")
-        size = lambda p: sum(  # noqa: E731
-            os.path.getsize(f) for f in glob.glob(f"{p}/*.parquet")
-        )
-        bytes_full, bytes_packed = size(f"{tmp}/full"), size(f"{tmp}/packed")
-
-        qids = [i * (n // n_queries) + 17 for i in range(n_queries)]
-        qvecs = {
-            r["vec_id"]: [float(x) for x in r["embedding"]]
-            for r in full.filter(F.col("vec_id").isin(qids)).collect()
-        }
-        t_exact = t_ham = t_rerank = 0.0
-        recalls: list[float] = []
-        recalls16: list[float] = []
-        for qid, qv in qvecs.items():
-            t0 = time.time()
-            exact = [
-                r["id"]
-                for r in knn_ops.expr_knn_join(
-                    spark.createDataFrame([(0, qv)], "query_id int, qvec array<float>"),
-                    full.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec")),
-                    k=10,
-                ).collect()
-            ]
-            t_exact += time.time() - t0
-            t0 = time.time()
-            quantize.binary_search(packed, qv, k=10).collect()
-            t_ham += time.time() - t0
-            t0 = time.time()
-            got = [
-                r["vec_id"]
-                for r in quantize.binary_search_rerank(
-                    packed, full, qv, k=10, rerank_k=40
-                ).collect()
-            ]
-            t_rerank += time.time() - t0
-            recalls.append(len(set(got) & set(exact)) / 10.0)
-            got16 = [
-                r["vec_id"]
-                for r in quantize.binary_search_rerank(
-                    packed, full, qv, k=10, rerank_k=160
-                ).collect()
-            ]
-            recalls16.append(len(set(got16) & set(exact)) / 10.0)
-        print(
-            json.dumps(
-                {
-                    "rows": n,
-                    "queries": n_queries,
-                    "bytes_full": bytes_full,
-                    "bytes_packed": bytes_packed,
-                    "compression": round(bytes_full / bytes_packed, 1),
-                    "sec_per_query_exact_expr": round(t_exact / n_queries, 2),
-                    "sec_per_query_hamming": round(t_ham / n_queries, 2),
-                    "sec_per_query_hamming_rerank": round(t_rerank / n_queries, 2),
-                    "recall_at_10_overfetch_4x": round(sum(recalls) / len(recalls), 3),
-                    "recall_at_10_overfetch_16x": round(sum(recalls16) / len(recalls16), 3),
-                }
-            )
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-        spark.stop()
-
-
-def lake_probe() -> None:
-    """Versioned-table probe (`python scale_probe.py lake`): what do the
-    manifest commits cost at millions of rows, and what do they buy?
-
-    8 appends of 1M rows each (sorted value ranges per commit, the
-    streaming steady state) measured against plain ParquetTable appends;
-    then a range probe with/without manifest skipping, an optimize, and a
-    change-feed read of the last commit."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from penr_oz_agent_memory_rust_spark.sources.tables import ParquetTable
-    from penr_oz_agent_memory_rust_spark.sources.versioned_tables import (
-        VersionedParquetTable,
-    )
-
-    spark = get_spark(app_name="poz-lake-probe")
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType(), False),
-            T.StructField("val", T.LongType(), True),
-            T.StructField("payload", T.DoubleType(), True),
-        ]
-    )
-    n_per, n_commits = 1_000_000, 8
-    tmp = tempfile.mkdtemp(prefix="poz_lake_")
-    out = {"rows_per_commit": n_per, "commits": n_commits}
-    try:
-        batches = [
-            spark.range(lo * n_per, (lo + 1) * n_per).select(
-                F.col("id"),
-                F.col("id").alias("val"),
-                (F.rand(lo) * 100).alias("payload"),
-            )
-            for lo in range(n_commits)
-        ]
-        plain = ParquetTable(spark, f"{tmp}/plain", schema)
-        t0 = time.time()
-        for b in batches:
-            plain.append(b)
-        out["plain_append_total_sec"] = round(time.time() - t0, 2)
-
-        lake = VersionedParquetTable(spark, f"{tmp}/lake", schema)
-        t0 = time.time()
-        for i, b in enumerate(batches):
-            lake.append(b, txn_app="probe", txn_id=i)
-        out["versioned_append_total_sec"] = round(time.time() - t0, 2)
-
-        lo, hi = 2_500_000, 2_600_000
-        t0 = time.time()
-        full = lake.read().filter((F.col("val") >= lo) & (F.col("val") <= hi)).count()
-        out["range_scan_all_files_sec"] = round(time.time() - t0, 2)
-        keep, total = lake.prune_files("val", lo, hi)
-        t0 = time.time()
-        pruned = (
-            lake.read_pruned("val", lo, hi)
-            .filter((F.col("val") >= lo) & (F.col("val") <= hi))
-            .count()
-        )
-        out["range_scan_pruned_sec"] = round(time.time() - t0, 2)
-        out["files_pruned"] = f"{len(keep)}/{total}"
-        assert full == pruned
-        t0 = time.time()
-        lake.optimize(n_files=16, sort_by="val")
-        out["optimize_sort_sec"] = round(time.time() - t0, 2)
-        t0 = time.time()
-        out["cdf_last_commit_rows"] = lake.changes(lake.current_version() - 2).count()
-        out["cdf_sec"] = round(time.time() - t0, 2)
-        # file-pruned upsert vs the full-rewrite cost model: 1k keys inside
-        # ONE commit's range against the 16-file optimized layout
-        ups = spark.range(2_500_000, 2_501_000).select(
-            F.col("id"), F.col("id").alias("val"), F.lit(-1.0).alias("payload")
-        )
-        t0 = time.time()
-        lake.merge_upsert(ups, ["id"])
-        out["pruned_upsert_sec"] = round(time.time() - t0, 2)
-        out["pruned_upsert_op"] = lake.history()[-1]["op"]
-        t0 = time.time()
-        plain.merge_upsert(ups, ["id"])
-        out["full_rewrite_upsert_sec"] = round(time.time() - t0, 2)
-        assert lake.read().count() == plain.read().count() == n_per * n_commits
-        print(json.dumps(out))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-        spark.stop()
-
-
-def lake_overcap_probe() -> None:
-    """Over-key-cap merge probe (`python scale_probe.py lake_overcap`):
-    the r4 verdict's failure scenario — a merge carrying MORE distinct
-    keys than the driver-collect cap — at 8M rows. The keys are scattered
-    (every 13th id) but confined to the bottom quarter of the key space,
-    so the exact distributed range-join resolution must rewrite only the
-    bottom-quarter files; output equality against the plain full-rewrite
-    backend proves last-writer-wins held on the over-cap path."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from penr_oz_agent_memory_rust_spark.sources.tables import ParquetTable
-    from penr_oz_agent_memory_rust_spark.sources.versioned_tables import (
-        VersionedParquetTable,
-    )
-
-    spark = get_spark(app_name="poz-lake-overcap-probe")
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType(), False),
-            T.StructField("val", T.LongType(), True),
-            T.StructField("payload", T.DoubleType(), True),
-        ]
-    )
-    n_per, n_commits = 1_000_000, 8
-    tmp = tempfile.mkdtemp(prefix="poz_lake_ovc_")
-    out = {"rows": n_per * n_commits}
-    try:
-        batches = [
-            spark.range(lo * n_per, (lo + 1) * n_per).select(
-                F.col("id"),
-                F.col("id").alias("val"),
-                (F.rand(lo) * 100).alias("payload"),
-            )
-            for lo in range(n_commits)
-        ]
-        lake = VersionedParquetTable(spark, f"{tmp}/lake", schema)
-        plain = ParquetTable(spark, f"{tmp}/plain", schema)
-        for b in batches:
-            lake.append(b)
-            plain.append(b)
-        lake.optimize(n_files=32, sort_by="id")
-        total_files = len(lake._load_manifest(lake.current_version())["files"])
-        # 153,846 distinct keys (cap is 100k): every 13th id in [0, 2M)
-        ups = (
-            spark.range(0, 2_000_000)
-            .filter(F.col("id") % 13 == 0)
-            .select(F.col("id"), F.lit(-7).alias("val"), F.lit(-1.0).alias("payload"))
-        )
-        out["distinct_update_keys"] = ups.count()
-        before_files = set(lake._load_manifest(lake.current_version())["files"])
-        t0 = time.time()
-        lake.merge_upsert(ups, ["id"])  # forces the > key_cap path
-        out["overcap_pruned_merge_sec"] = round(time.time() - t0, 2)
-        out["merge_op"] = lake.history()[-1]["op"]
-        after_files = set(lake._load_manifest(lake.current_version())["files"])
-        survivors = len(before_files & after_files)
-        out["files_untouched"] = f"{survivors}/{total_files}"
-        t0 = time.time()
-        plain.merge_upsert(ups, ["id"])
-        out["full_rewrite_merge_sec"] = round(time.time() - t0, 2)
-        # last-writer-wins equality across backends, checksum-level
-        chk = lambda t_: t_.read().agg(  # noqa: E731
-            F.count("*").alias("n"),
-            F.sum("id").alias("si"),
-            F.sum("val").alias("sv"),
-        ).first()
-        a, b = chk(lake), chk(plain)
-        assert (a["n"], a["si"], a["sv"]) == (b["n"], b["si"], b["sv"]), (a, b)
-        out["equal_to_full_rewrite"] = True
-        print(json.dumps(out))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-        spark.stop()
-
-
-def lake_composite_probe() -> None:
-    """Composite-key box pruning (`python scale_probe.py lake_composite`):
-    8M rows keyed by (k1, k2); updates confined to one k1 stripe must
-    leave every other stripe's files untouched even though the k2
-    component spans its full range in every file — the per-column
-    [min,max] box test only needs ONE discriminating column."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from penr_oz_agent_memory_rust_spark.sources.versioned_tables import (
-        VersionedParquetTable,
-    )
-
-    spark = get_spark(app_name="poz-lake-composite-probe")
-    schema = T.StructType(
-        [
-            T.StructField("k1", T.LongType(), False),
-            T.StructField("k2", T.LongType(), False),
-            T.StructField("payload", T.DoubleType(), True),
-        ]
-    )
-    n_per, n_commits = 1_000_000, 8
-    tmp = tempfile.mkdtemp(prefix="poz_lake_comp_")
-    out = {"rows": n_per * n_commits}
-    try:
-        lake = VersionedParquetTable(spark, f"{tmp}/lake", schema)
-        for lo in range(n_commits):  # k1 stripes, k2 full-range everywhere
-            lake.append(
-                spark.range(lo * n_per, (lo + 1) * n_per)
-                .select(
-                    F.col("id").alias("k1"),
-                    (F.col("id") % 1000).alias("k2"),
-                    (F.rand(lo) * 100).alias("payload"),
-                )
-                .coalesce(2)
-            )
-        total = len(lake._load_manifest(lake.current_version())["files"])
-        ups = (
-            spark.range(2_000_000, 2_050_000)
-            .select(
-                F.col("id").alias("k1"),
-                (F.col("id") % 1000).alias("k2"),
-                F.lit(-1.0).alias("payload"),
-            )
-        )
-        before = set(lake._load_manifest(lake.current_version())["files"])
-        t0 = time.time()
-        lake.merge_upsert(ups, ["k1", "k2"])
-        out["composite_pruned_merge_sec"] = round(time.time() - t0, 2)
-        out["merge_op"] = lake.history()[-1]["op"]
-        after = set(lake._load_manifest(lake.current_version())["files"])
-        out["files_untouched"] = f"{len(before & after)}/{total}"
-        n = lake.read().count()
-        assert n == n_per * n_commits, n
-        got = lake.read().filter(
-            (F.col("k1") >= 2_000_000) & (F.col("k1") < 2_050_000)
-        ).agg(F.min("payload"), F.max("payload")).first()
-        assert got[0] == got[1] == -1.0, got
-        out["updates_applied"] = True
-        print(json.dumps(out))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-        spark.stop()
-
-
-def lake_bloom_probe() -> None:
-    """Uuid-keyed point-mutation probe (`python scale_probe.py lake_bloom`):
-    2M rows across 16 files keyed by uuid strings — every file's [min,max]
-    spans the whole keyspace, so range skipping degenerates to
-    rewrite-everything. The per-file bloom sidecars must bring a 5-key
-    point delete back to O(holding files), and the commit-time bloom
-    build cost must stay a small fraction of the write."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
-    from pyspark.sql import types as T
-
-    from penr_oz_agent_memory_rust_spark.sources.versioned_tables import (
-        VersionedParquetTable,
-    )
-
-    spark = get_spark(app_name="poz-lake-bloom-probe")
-    schema = T.StructType(
-        [
-            T.StructField("id", T.StringType(), False),
-            T.StructField("val", T.LongType(), True),
-        ]
-    )
-    n_per, n_commits = 125_000, 16
-    tmp = tempfile.mkdtemp(prefix="poz_lake_bloom_")
-    out = {"rows": n_per * n_commits, "files": n_commits}
-    try:
-        uuid_expr = F.expr(
-            "concat(lpad(hex(hash(id)), 8, '0'), '-', lpad(hex(id), 12, '0'))"
-        )
-        batches = [
-            spark.range(lo * n_per, (lo + 1) * n_per).select(
-                uuid_expr.alias("id"), F.col("id").alias("val")
-            )
-            for lo in range(n_commits)
-        ]
-        plain = VersionedParquetTable(spark, f"{tmp}/plain", schema)
-        t0 = time.time()
-        for b in batches:
-            plain.append(b.coalesce(1))
-        out["append_no_bloom_sec"] = round(time.time() - t0, 2)
-        lake = VersionedParquetTable(spark, f"{tmp}/lake", schema, bloom_cols=["id"])
-        t0 = time.time()
-        for b in batches:
-            lake.append(b.coalesce(1))
-        out["append_with_bloom_sec"] = round(time.time() - t0, 2)
-        # 5 point keys scattered across 3 of the 16 files
-        victims = [
-            r["id"]
-            for r in lake.read()
-            .filter(F.col("val").isin([7, 300_000, 300_001, 900_000, 1_900_000]))
-            .collect()
-        ]
-        keep, total = lake.prune_files_by_keys("id", victims)
-        out["files_matching_bloom"] = f"{len(keep)}/{total}"
-        t0 = time.time()
-        lake.delete_keys(victims, "id")
-        out["bloom_point_delete_sec"] = round(time.time() - t0, 2)
-        files_after = set(lake._load_manifest(lake.current_version())["files"])
-        out["files_rewritten_bloom"] = total - len(
-            [f for f in keep if f not in files_after]
-        )  # placeholder corrected below
-        out["files_untouched_bloom"] = len(
-            [f for f in lake._load_manifest(lake.current_version() - 1)["files"] if f in files_after]
-        )
-        t0 = time.time()
-        plain.delete_keys(victims, "id")
-        out["range_only_point_delete_sec"] = round(time.time() - t0, 2)
-        prev_plain = plain._load_manifest(plain.current_version() - 1)["files"]
-        cur_plain = set(plain._load_manifest(plain.current_version())["files"])
-        out["files_untouched_range_only"] = len(
-            [f for f in prev_plain if f in cur_plain]
-        )
-        assert lake.read().count() == plain.read().count() == n_per * n_commits - 5
-        del out["files_rewritten_bloom"]
-        print(json.dumps(out))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-        spark.stop()
-
-
-def curate_probe() -> None:
-    """Filter-first ordering probe (`python scale_probe.py curate`;
-    SCALE_CURATE_DOCS overrides N, default 2M): pipeline_curate_corpus
-    runs the Gopher rule-filter BEFORE MinHash pair generation, so the
-    shingle/signature pipeline never sees rejected docs. This probe
-    quantifies that claim: the skewed synthetic corpus gets a stop-word
-    tail on 60% of docs (so the REAL gopher stop-list rule drives
-    rejection), then times
-
-      - gopher scan alone (map-only, the cheap pre-filter),
-      - minhash pairs over ALL docs (filter-last ordering),
-      - gopher + minhash over the 60% survivors (filter-first).
-
-    Expected shape: the filter scan is a small constant, and the pair
-    stage cost tracks survivor count — at 100 TB the saving is the
-    rejected fraction of the dominant stage, bought for one cheap scan.
-    """
-    from penr_oz_agent_memory_rust_spark.operators import text_ops
-
-    n_docs = int(os.environ.get("SCALE_CURATE_DOCS", "2000000"))
-    spark = get_spark(app_name="poz-curate-probe")
-    import tempfile
-
-    # materialize the corpus to parquet first — the operators' real input
-    # is a stored table, and leaving the synthetic md5 text generation
-    # in-plan would re-run it once per consumer, charging corpus synthesis
-    # to whichever path has more consumers instead of measuring the
-    # operators
-    root = tempfile.mkdtemp(prefix="curateprobe-")
-    _synth_skewed_corpus(spark, n_docs).select(
-        "doc_id",
-        F.when(
-            F.pmod(F.col("doc_id"), F.lit(10)) < 6,
-            F.concat(F.col("text"), F.lit(" the and that have with")),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    ).write.mode("overwrite").parquet(f"{root}/docs")
-    docs = spark.read.parquet(f"{root}/docs")
-    report: dict = {"n_docs": n_docs}
-
-    def run(name, df):
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        report[name] = round(time.time() - t0, 3)
-
-    g = text_ops.gopher_quality_rules(docs, min_words=1, min_stopword_hits=2)
-    run("gopher_scan_sec", g)
-    # the join-back (keep-list semi-join) form vs the inline predicate:
-    # past the broadcast threshold the keep list forces a corpus shuffle,
-    # the predicate filters inside the scan
-    keep = g.filter("gopher_ok").select("doc_id")
-    joined = docs.join(keep, "doc_id", "semi")
-    pred = docs.filter(
-        text_ops.gopher_ok_expr(F.col("text"), min_words=1, min_stopword_hits=2)
-    )
-    report["survivor_frac"] = round(pred.count() / n_docs, 4)
-    run(
-        "pairs_all_sec",
-        dedup.minhash_lsh_pairs(docs, n_hashes=12, bands=4, max_bucket=200),
-    )
-    run(
-        "pairs_joinback_sec",
-        dedup.minhash_lsh_pairs(joined, n_hashes=12, bands=4, max_bucket=200),
-    )
-    run(
-        "pairs_predicate_sec",
-        dedup.minhash_lsh_pairs(pred, n_hashes=12, bands=4, max_bucket=200),
-    )
-    print(json.dumps(report))
-
-
 def _shuffle_write_bytes(spark) -> int:
     """Total shuffle-write bytes across completed stages, from the local
     Spark UI REST API — deltas between probe stages attribute shuffle
     volume per funnel stage. Returns -1 if the UI is unreachable."""
-    import json as _j
     import urllib.request
 
     try:
@@ -1570,7 +72,7 @@ def _shuffle_write_bytes(spark) -> int:
         with urllib.request.urlopen(
             f"{base}/api/v1/applications/{app}/stages?status=complete", timeout=10
         ) as r:
-            stages = _j.load(r)
+            stages = json.load(r)
         return sum(int(s.get("shuffleWriteBytes", 0)) for s in stages)
     except Exception:  # noqa: BLE001
         return -1
@@ -1623,8 +125,8 @@ def funnel_probe() -> None:
     report: dict = {"n_docs": n_docs, "est_threshold": 0.5, "strip_min_df": min_df}
 
     # corpus: skewed dups + a stopword tail on 60% so the REAL gopher
-    # stop-list rule drives rejection (same shape as curate_probe) AND the
-    # boilerplate collision mass exists for the strip arm to remove
+    # stop-list rule drives rejection AND the boilerplate collision mass
+    # exists for the strip arm to remove
     _synth_skewed_corpus(spark, n_docs, words=words).select(
         "doc_id",
         F.when(
@@ -1750,416 +252,6 @@ def funnel_probe() -> None:
                 flush=True,
             )
     print(json.dumps(report))
-
-
-def bucket_probe() -> None:
-    """Adaptive bucket-width probe for the global-order machinery
-    (`python scale_probe.py buckets`; SCALE_BUCKET_ROWS overrides N,
-    default 50M): assign_shards with bucket_chars=None must derive a
-    width that keeps every per-bucket window task's input bounded by
-    ~TARGET_BUCKET_ROWS, where the r8-default fixed width (2) would at
-    some corpus size put the whole table through few buckets — and a
-    fixed width of 1 already concentrates N/16 rows per window task at
-    any N. Records the derived width, the MEASURED max per-bucket rows
-    at the derived width vs fixed widths 1 and 2, and the end-to-end
-    wall time of the adaptive rank pass (count job + window pass)."""
-    n_rows = int(os.environ.get("SCALE_BUCKET_ROWS", "50000000"))
-    spark = get_spark(app_name="poz-bucket-probe")
-    from penr_oz_agent_memory_rust_spark.operators import export
-
-    base = spark.range(n_rows).select(F.col("id").alias("doc_id"))
-    keyed = export.deterministic_shuffle_key(base, "doc_id", salt="bp")
-    report: dict = {"n_rows": n_rows, "target_bucket_rows": export.TARGET_BUCKET_ROWS}
-
-    def max_bucket(chars: int) -> int:
-        return (
-            keyed.groupBy(F.substring(F.col(export.SHUFFLE_KEY), 1, chars).alias("b"))
-            .count()
-            .agg(F.max("count").alias("m"))
-            .collect()[0]["m"]
-        )
-
-    derived = export.derive_bucket_chars(n_rows)
-    report["derived_chars"] = derived
-    for c in sorted({1, 2, derived}):
-        report[f"max_bucket_rows_chars{c}"] = max_bucket(c)
-    report["bounded"] = (
-        report[f"max_bucket_rows_chars{derived}"]
-        <= int(export.TARGET_BUCKET_ROWS * 1.05)  # md5-uniform jitter margin
-    )
-
-    t0 = time.time()
-    ranked = export.exact_global_rank(keyed, export.SHUFFLE_KEY, "doc_id", rank_col="r")
-    # count/min/max alone can't distinguish a dense rank from duplicates
-    # with compensating holes — count_distinct is the invariant the
-    # bucket-offset arithmetic could actually violate
-    agg = ranked.agg(
-        F.count("*").alias("n"),
-        F.count_distinct("r").alias("nd"),
-        F.min("r").alias("lo"),
-        F.max("r").alias("hi"),
-    ).collect()[0]
-    report["adaptive_rank_sec"] = round(time.time() - t0, 2)
-    report["rank_exact"] = (
-        agg["n"] == n_rows
-        and agg["nd"] == n_rows
-        and agg["lo"] == 0
-        and agg["hi"] == n_rows - 1
-    )
-    print(json.dumps(report))
-
-
-def takedown_probe() -> None:
-    """Takedown (delete-path) probe for the stored LSH index
-    (`python scale_probe.py takedown`; SCALE_TAKEDOWN_DOCS overrides the
-    corpus, default 2M docs -> 8M band rows): build index + (bucket,cnt)
-    companion as versioned tables, cluster the index by doc_id
-    (optimize sort_by), then remove a 1k-doc takedown batch with
-    remove_from_lsh_index. Records wall seconds, the fraction of index
-    files rewritten (delete_keys' stats+Bloom pruning should touch only
-    the files holding the victims), companion equality vs a fresh
-    rebuild, and replay convergence."""
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from penr_oz_agent_memory_rust_spark.sources.versioned_tables import (
-        VersionedParquetTable,
-    )
-
-    n_docs = int(os.environ.get("SCALE_TAKEDOWN_DOCS", "2000000"))
-    spark = get_spark(app_name="poz-takedown-probe")
-    root = tempfile.mkdtemp(prefix="takedownprobe-")
-    docs = _synth_skewed_corpus(spark, n_docs)
-    report: dict = {"n_docs": n_docs}
-
-    bands_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("bucket", T.StringType())]
-    )
-    counts_schema = T.StructType(
-        [T.StructField("bucket", T.StringType()), T.StructField("cnt", T.LongType())]
-    )
-    index = VersionedParquetTable(spark, f"{root}/bands", bands_schema)
-    counts = VersionedParquetTable(spark, f"{root}/counts", counts_schema)
-    t0 = time.time()
-    bands = dedup.lsh_band_rows(docs, n_hashes=12, bands=4)
-    index.append(bands, txn_app="td", txn_id=0)
-    counts.append(dedup.lsh_bucket_counts(index.read()), txn_app="td", txn_id=0)
-    index.optimize(sort_by="doc_id")
-    report["build_sec"] = round(time.time() - t0, 2)
-    report["band_rows"] = index.count_rows()
-    files_before = len(index._load_manifest(index.current_version())["files"])
-    report["index_files"] = files_before
-
-    victims = list(range(1000, 2000))  # contiguous ids -> few files hold them
-    t0 = time.time()
-    stats = dedup.remove_from_lsh_index(index, counts, victims)
-    report["takedown_sec"] = round(time.time() - t0, 2)
-    report.update(stats)
-    # how many files did the delete rewrite? (delete commits a rewritten
-    # file set; untouched files keep their path)
-    m_now = index._load_manifest(index.current_version())["files"]
-    m_prev = index._load_manifest(index.current_version() - 1)["files"]
-    report["files_rewritten"] = len(set(m_prev) - set(m_now))
-    report["files_kept_zero_copy"] = len(set(m_prev) & set(m_now))
-
-    # companion == fresh rebuild over the survivors, and replay converges
-    t0 = time.time()
-    fresh = dedup.lsh_bucket_counts(index.read())
-    mism = (
-        counts.read()
-        .join(fresh.withColumnRenamed("cnt", "f"), "bucket", "full")
-        .filter(
-            F.coalesce(F.col("cnt"), F.lit(-1)) != F.coalesce(F.col("f"), F.lit(-1))
-        )
-        .count()
-    )
-    report["companion_check_sec"] = round(time.time() - t0, 2)
-    report["companion_mismatches"] = mism
-    again = dedup.remove_from_lsh_index(index, counts, victims)
-    report["replay_docs_removed"] = again["docs_removed"]
-    print(json.dumps(report))
-
-
-def companion_decay_probe() -> None:
-    """Companion cnt-clustering decay probe (`python scale_probe.py decay`;
-    SCALE_DECAY_BUCKETS overrides N, default 2M): the (bucket, cnt)
-    companion's heavy-tail pushdown relies on a cnt-clustered file layout
-    (tight per-file [min,max] on cnt). merge_upsert maintenance rewrites
-    matched files keyed by BUCKET, so rewritten files mix cnt ranges and
-    the layout decays over days. This probe bootstraps the companion
-    cnt-clustered in a VersionedParquetTable, runs N days of scattered
-    bucket-count bumps, and records per day the heavy-tail predicate's
-    file pruning (kept/total files + kept bytes) on two twins:
-    one left to decay, one re-clustered daily with OPTIMIZE sort_by=cnt.
-    Expected: decayed twin's kept bytes grow toward the full table;
-    re-clustered twin stays flat at the heavy tail."""
-    from pyspark.sql import types as T
-
-    from penr_oz_agent_memory_rust_spark.sources.versioned_tables import (
-        VersionedParquetTable,
-    )
-
-    n_buckets = int(os.environ.get("SCALE_DECAY_BUCKETS", "2000000"))
-    n_days = int(os.environ.get("SCALE_DECAY_DAYS", "5"))
-    spark = get_spark(app_name="poz-companion-decay-probe")
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="decayprobe-")
-    sch = T.StructType(
-        [T.StructField("bucket", T.StringType()), T.StructField("cnt", T.LongType())]
-    )
-    # skewed companion: ~0.1% of buckets heavy (cnt 500..899), rest 1..5 —
-    # the realistic shape (degenerate boilerplate buckets are rare)
-    base = spark.range(n_buckets).select(
-        F.md5(F.col("id").cast("string")).alias("bucket"),
-        F.when(F.col("id") % 1000 == 0, 500 + F.col("id") % 400)
-        .otherwise(1 + F.col("id") % 5)
-        .cast("long")
-        .alias("cnt"),
-    )
-    heavy_lo = 100  # the operator's cnt > max_bucket - b_max stand-in
-
-    def kept_bytes(t: VersionedParquetTable) -> tuple[int, int, int]:
-        keep, total = t.prune_files("cnt", lo=heavy_lo)
-        nbytes = sum(os.path.getsize(os.path.join(t.path, f)) for f in keep)
-        return len(keep), total, nbytes
-
-    report: dict = {"n_buckets": n_buckets, "n_days": n_days, "days": []}
-    twins = {}
-    for name in ("decayed", "reclustered"):
-        t = VersionedParquetTable(spark, os.path.join(root, name), sch)
-        t.append(base.repartitionByRange(32, "cnt").sortWithinPartitions("cnt"))
-        twins[name] = t
-
-    for day in range(1, n_days + 1):
-        # ~1% of buckets bumped, scattered uniformly across the id (and
-        # therefore cnt) space — the daily-crawl maintenance shape
-        upd = (
-            spark.range(n_buckets)
-            .filter(F.col("id") % 97 == day)
-            .select(
-                F.md5(F.col("id").cast("string")).alias("bucket"),
-                F.when(F.col("id") % 1000 == 0, 500 + F.col("id") % 400)
-                .otherwise(1 + F.col("id") % 5)
-                .cast("long")
-                .alias("cnt"),
-            )
-            .withColumn("cnt", F.col("cnt") + day)
-        )
-        row: dict = {"day": day}
-        for name, t in twins.items():
-            t0 = time.time()
-            t.merge_upsert(upd, ["bucket"])
-            if name == "reclustered":
-                t.optimize(n_files=32, sort_by="cnt")
-            k, tot, nb = kept_bytes(t)
-            row[name] = {
-                "kept_files": k,
-                "total_files": tot,
-                "kept_mb": round(nb / 1e6, 2),
-                "sec": round(time.time() - t0, 2),
-            }
-        report["days"].append(row)
-        print(json.dumps(row))
-    print(json.dumps(report))
-
-
-def chrome_strip_probe() -> None:
-    """strip_common_lines at corpus scale (`python scale_probe.py chrome`;
-    SCALE_CHROME_DOCS overrides, default 10M docs over 200 sites): each
-    page carries 4 per-site chrome lines (header / nav / cookie banner /
-    footer) around 3 page-unique body lines — the realistic shape where
-    the structural strip earns its keep. Records wall seconds for the
-    full strip (df agg + vocab broadcast + rewrite), verifies the
-    analytic vocab bound |vocab per site| <= lines-per-doc / min_frac,
-    and checks exact chrome accounting (every doc loses exactly its 4
-    chrome lines, keeps its 3 unique ones)."""
-    n_docs = int(os.environ.get("SCALE_CHROME_DOCS", "10000000"))
-    n_sites = 200
-    spark = get_spark(app_name="poz-chrome-probe")
-    from penr_oz_agent_memory_rust_spark.operators import text_ops
-
-    docs = spark.range(n_docs).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("site"), (F.col("id") % n_sites).cast("string")).alias("source"),
-        F.concat_ws(
-            "\n",
-            F.concat(F.lit("welcome to site "), (F.col("id") % n_sites).cast("string")),
-            F.concat(F.lit("home products about contact site "), (F.col("id") % n_sites).cast("string")),
-            F.concat(F.lit("this website uses cookies accept or decline site "), (F.col("id") % n_sites).cast("string")),
-            F.concat(F.lit("unique body line one for page "), F.col("id").cast("string")),
-            F.concat(F.lit("unique body line two about topic "), (F.col("id") * 7).cast("string")),
-            F.concat(F.lit("unique closing thought number "), (F.col("id") * 13).cast("string")),
-            F.concat(F.lit("copyright all rights reserved site "), (F.col("id") % n_sites).cast("string")),
-        ).alias("text"),
-    )
-    report: dict = {"n_docs": n_docs, "n_sites": n_sites}
-    t0 = time.time()
-    out = text_ops.strip_common_lines(docs, min_frac=0.5, min_docs=2)
-    agg = out.agg(
-        F.count("*").alias("rows"),
-        F.sum("n_removed").alias("removed"),
-        F.sum("n_lines").alias("lines"),
-        F.sum(F.when(F.col("n_removed") != 4, 1).otherwise(0)).alias("bad_docs"),
-    ).first()
-    report["strip_sec"] = round(time.time() - t0, 2)
-    report["rows_out"] = agg["rows"]
-    report["chrome_lines_removed"] = agg["removed"]
-    report["bad_docs"] = agg["bad_docs"]  # every doc must lose exactly 4
-    report["accounting_ok"] = bool(
-        agg["rows"] == n_docs
-        and agg["removed"] == 4 * n_docs
-        and agg["bad_docs"] == 0
-        and agg["lines"] == 7 * n_docs
-    )
-    # analytic vocab bound: <= lines-per-doc / min_frac = 7 / 0.5 = 14
-    lines_arr = F.split(F.col("text"), "\n")
-    exploded = docs.select(
-        "source", "doc_id", F.explode(F.array_distinct(lines_arr)).alias("l")
-    )
-    gn = docs.groupBy("source").agg(F.count("*").alias("gn"))
-    vocab = (
-        exploded.groupBy("source", "l")
-        .agg(F.count_distinct("doc_id").alias("df"))
-        .join(gn, "source")
-        .filter((F.col("df") >= 2) & (F.col("df") >= F.col("gn") * 0.5))
-        .groupBy("source")
-        .agg(F.count("*").alias("v"))
-        .agg(F.max("v").alias("vmax"))
-        .first()
-    )
-    report["vocab_max_per_site"] = vocab["vmax"]
-    report["vocab_bound"] = 14
-    report["vocab_bound_ok"] = bool(vocab["vmax"] <= 14)
-    print(json.dumps(report))
-
-
-def ivf_takedown_probe() -> None:
-    """Takedown probe for the persisted IVF serving index
-    (`python scale_probe.py ivf_takedown`; SCALE_IVF_TD_ROWS overrides,
-    default 4M vectors, dim 32): build (2M) + 8 appends (250k each) so
-    every cell holds many files, snapshot, then remove a 1k contiguous-id
-    victim batch with remove_from_ivf_index. Records wall seconds, the
-    matched-file fraction (footer-stat pruning should touch only the
-    files whose id range covers a victim — the append batches are
-    id-contiguous, so most files are provably clean from their stats),
-    hardlink preservation of untouched files, post-takedown search
-    correctness, replay convergence, and the snapshot purge cost."""
-    import glob as _glob
-    import tempfile
-
-    from penr_oz_agent_memory_rust_spark.operators import ivf_index
-
-    n_rows = int(os.environ.get("SCALE_IVF_TD_ROWS", "4000000"))
-    base_rows = n_rows // 2
-    n_appends = 8
-    app_rows = (n_rows - base_rows) // n_appends
-    dim = 32
-    spark = get_spark(app_name="poz-ivf-takedown-probe")
-    root = tempfile.mkdtemp(prefix="ivftd-")
-    path = os.path.join(root, "idx")
-
-    def vecs(lo, n):
-        return spark.range(lo, lo + n).select(
-            F.col("id").alias("vec_id"),
-            F.expr(
-                f"transform(sequence(1, {dim}), i -> cast(sin(id * i + i) as float))"
-            ).alias("embedding"),
-        )
-
-    report: dict = {"n_rows": n_rows, "dim": dim}
-    t0 = time.time()
-    ivf_index.build_ivf_index(vecs(0, base_rows), path, n_centroids=32, n_iters=3)
-    for a in range(n_appends):
-        ivf_index.append_to_ivf_index(vecs(base_rows + a * app_rows, app_rows), path)
-    report["build_sec"] = round(time.time() - t0, 2)
-    data = os.path.join(path, "data")
-    files = _glob.glob(os.path.join(data, "**", "*.parquet"), recursive=True)
-    report["index_files"] = len(files)
-    t0 = time.time()
-    ivf_index.snapshot_ivf_index(path, tag="pre-takedown")
-    report["snapshot_sec"] = round(time.time() - t0, 2)
-
-    victims = list(range(100000, 101000))  # contiguous ids -> few files match
-    t0 = time.time()
-    stats = ivf_index.remove_from_ivf_index(spark, path, victims)
-    report["takedown_sec"] = round(time.time() - t0, 2)
-    report.update(stats)
-    report["matched_file_frac"] = round(stats["files_rewritten"] / len(files), 4)
-    post = spark.read.parquet(data)
-    report["victims_left"] = post.filter(F.col("vec_id").isin(victims)).count()
-    report["rows_after"] = post.count()
-    report["rows_ok"] = bool(report["rows_after"] == n_rows - len(victims))
-    again = ivf_index.remove_from_ivf_index(spark, path, victims)
-    report["replay_docs_removed"] = again["docs_removed"]
-
-    t0 = time.time()
-    purged = ivf_index.purge_ivf_snapshots(spark, path, victims)
-    report["purge_sec"] = round(time.time() - t0, 2)
-    report["purge_files_rewritten"] = purged["files_rewritten"]
-    sdata = os.path.join(path, "snapshots", "v0001", "data")
-    report["snapshot_victims_left"] = (
-        spark.read.parquet(sdata).filter(F.col("vec_id").isin(victims)).count()
-    )
-    print(json.dumps(report))
-
-
-
-def url_probe() -> None:
-    """URL canonicalization + canonical-URL dedup at crawl scale
-    (`python scale_probe.py urls`; SCALE_URL_ROWS overrides, default
-    50M): synthesized recrawl variants (5 URL spellings per underlying
-    page — case/www/port/tracking/fragment/slash/param-order noise over
-    10M distinct pages). Records wall seconds for (a) canonicalization
-    alone (pure JVM regexp/array expressions — map-only) and (b) the
-    full keep-best dedup (one shuffle on the canonical key), plus the
-    exactness check: every page collapses to exactly one survivor."""
-    from penr_oz_agent_memory_rust_spark.operators import urls
-
-    n = int(os.environ.get("SCALE_URL_ROWS", "50000000"))
-    spark = get_spark(app_name="poz-url-probe")
-    pages = n // 5
-    docs = spark.range(n).select(
-        F.col("id").alias("doc_id"),
-        F.concat(
-            F.when(F.col("id") % 5 == 0, F.lit("HTTP://WWW."))
-            .when(F.col("id") % 5 == 1, F.lit("http://"))
-            .when(F.col("id") % 5 == 2, F.lit("https://"))
-            .when(F.col("id") % 5 == 3, F.lit("http://www."))
-            .otherwise(F.lit("")),
-            F.lit("site"), (F.col("id") % 1000).cast("string"),
-            F.lit(".example.com"),
-            F.when(F.col("id") % 5 == 0, F.lit(":80")).otherwise(F.lit("")),
-            F.lit("/page/"), ((F.col("id") / 5).cast("bigint") % (pages // 1000 + 1)).cast("string"),
-            F.when(F.col("id") % 2 == 0, F.lit("/")).otherwise(F.lit("")),
-            F.when(F.col("id") % 3 == 0, F.lit("?utm_source=x&b=2&a=1#f"))
-            .when(F.col("id") % 3 == 1, F.lit("?a=1&b=2"))
-            .otherwise(F.lit("")),
-        ).alias("url"),
-        (F.col("id") % 97).cast("double").alias("score"),
-    )
-    report: dict = {"n_rows": n}
-    t0 = time.time()
-    n_canon = docs.select(
-        urls.canonicalize_url_expr(F.col("url")).alias("c")
-    ).filter(F.col("c").isNotNull()).count()
-    report["canonicalize_sec"] = round(time.time() - t0, 2)
-    report["rows_canonicalized"] = n_canon
-    t0 = time.time()
-    kept = urls.url_dedup_keep_best(docs, F.col("score"))
-    agg = kept.agg(
-        F.count("*").alias("survivors"),
-        F.sum("dup_count").alias("total"),
-        F.max("dup_count").alias("max_cluster"),
-    ).first()
-    report["dedup_sec"] = round(time.time() - t0, 2)
-    report["survivors"] = agg["survivors"]
-    report["rows_accounted"] = agg["total"]
-    report["max_cluster"] = agg["max_cluster"]
-    report["accounting_ok"] = bool(agg["total"] == n)
-    print(json.dumps(report))
-
 
 
 def core_scaling_probe() -> None:
@@ -2313,210 +405,10 @@ def core_scaling_probe() -> None:
     spark.stop()
 
 
-def main() -> None:
-    spark = get_spark(app_name="poz-scale-probe")
-    t = {}
-    out_rows = {}
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    big_emb = inflate(emb, EMB_COPIES, "vec_id", 1_000_000).cache()
-    n_emb = big_emb.count()
-
-    # all-pairs KNN graph over the inflated corpus (2-D block nested loop —
-    # the no-driver-collect path; blocked_knn_join now guards against
-    # corpus-scale query sides)
-    q = big_emb.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-    c = big_emb.select("vec_id", F.col("embedding").alias("vec"))
-    t0 = time.time()
-    out_rows["knn_all_pairs"] = knn.blocked_knn_self_join(
-        c, k=3, id_col="vec_id", vec_col="vec"
-    ).count()
-    t["knn_all_pairs"] = round(time.time() - t0, 2)
-
-    # LSH ANN over the same corpus (shuffle-bound path)
-    t0 = time.time()
-    out_rows["lsh_ann"] = knn.lsh_knn_join(
-        q.limit(512), c, k=5, n_planes=8,
-        query_id="qid", corpus_id="vec_id", query_vec="qv", corpus_vec="vec",
-    ).count()
-    t["lsh_ann"] = round(time.time() - t0, 2)
-
-    # approximate kNN GRAPH: the scale alternative to the exact all-pairs
-    # plan above — bucket-collision pairs instead of N² scores. Measured on
-    # DISTINCT synthesized vectors: the inflated corpus is EMB_COPIES exact
-    # clones of each embedding, and clone pairs collide in every LSH table
-    # (the operator's documented degenerate case — dedup first on real data)
-    distinct_vecs = (
-        spark.range(n_emb)
-        .select(
-            F.col("id").alias("vec_id"),
-            F.expr(
-                "transform(sequence(1, 64), i -> cast(sin(id * i + i) as float))"
-            ).alias("vec"),
-        )
-        .cache()  # materialize synthesis once: the graph reads the corpus
-    )
-    distinct_vecs.count()  # twice (signatures + bucket groups)
-    t0 = time.time()
-    graph = knn.lsh_knn_self_join(
-        distinct_vecs, k=3, n_planes=9, n_tables=8, id_col="vec_id", vec_col="vec"
-    ).persist()
-    out_rows["knn_graph_lsh"] = graph.count()
-    t["knn_graph_lsh"] = round(time.time() - t0, 2)
-
-    # PageRank over that graph: the iterative-algorithm shape at 100k
-    # nodes — per-iteration cost must stay join+agg-bound (node-sized
-    # frames), nothing collected
-    from penr_oz_agent_memory_rust_spark.operators.pagerank import pagerank
-
-    t0 = time.time()
-    out_rows["pagerank_10it"] = pagerank(
-        graph.select(F.col("vec_id_a").alias("src"), F.col("vec_id_b").alias("dst")),
-        iters=10,
-    ).count()
-    t["pagerank_10it"] = round(time.time() - t0, 2)
-
-    # label propagation over the same graph: every 100th node seeds a
-    # 10-class label; same join+agg-per-iteration shape as pagerank
-    from penr_oz_agent_memory_rust_spark.operators.label_prop import label_propagation
-
-    seeds = (
-        graph.select(F.col("vec_id_a").alias("id"))
-        .distinct()
-        .filter(F.col("id") % 100 == 0)
-        .withColumn("label", F.col("id") % 10)
-    )
-    t0 = time.time()
-    out_rows["label_prop_5it"] = label_propagation(
-        graph.select(F.col("vec_id_a").alias("src"), F.col("vec_id_b").alias("dst")),
-        seeds,
-        iters=5,
-    ).filter(F.col("label").isNotNull()).count()
-    t["label_prop_5it"] = round(time.time() - t0, 2)
-    graph.unpersist()
-    distinct_vecs.unpersist()
-    big_emb.unpersist()
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    big_docs = inflate(docs, DOC_COPIES, "doc_id", 1_000_000)
-    t0 = time.time()
-    out_rows["minhash_lsh"] = dedup.minhash_lsh_pairs(big_docs).count()
-    t["minhash_lsh"] = round(time.time() - t0, 2)
-
-    t0 = time.time()
-    out_rows["exact_dedup"] = dedup.exact_dedup(big_docs).count()
-    t["exact_dedup"] = round(time.time() - t0, 2)
-
-    # training-shard assignment: the bucketed global rank must scale as a
-    # bucket-count-bounded pair of passes, not a global window
-    from penr_oz_agent_memory_rust_spark.operators import export, packing
-    from penr_oz_agent_memory_rust_spark.operators.corpus import corpus_mixture_sample
-
-    t0 = time.time()
-    out_rows["training_shards"] = export.assign_shards(
-        big_docs.select("doc_id"), "doc_id", rows_per_shard=4096, bucket_chars=3
-    ).count()
-    t["training_shards"] = round(time.time() - t0, 2)
-
-    t0 = time.time()
-    out_rows["corpus_mix"] = corpus_mixture_sample(
-        big_docs.select("doc_id", "lang"),
-        {"en": 0.5, "de": 0.2, "fr": 0.2, "es": 0.1},
-        n_total=big_docs.count() // 2,
-    ).count()
-    t["corpus_mix"] = round(time.time() - t0, 2)
-
-    t0 = time.time()
-    out_rows["sequence_packing"] = packing.pack_sequences(
-        big_docs.select("doc_id", "text"), token_budget=512, n_buckets=64
-    ).count()
-    t["sequence_packing"] = round(time.time() - t0, 2)
-
-    # LM quality scoring: train on a fixed slice, score the inflated corpus
-    from penr_oz_agent_memory_rust_spark.operators.corpus import (
-        char_bigram_counts,
-        lm_quality_score,
-    )
-
-    t0 = time.time()
-    lm = char_bigram_counts(big_docs.filter(F.col("doc_id") < 5000))
-    out_rows["lm_quality"] = lm_quality_score(big_docs, lm).count()
-    t["lm_quality"] = round(time.time() - t0, 2)
-
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    big_li = inflate(li, LI_COPIES, "l_orderkey", 100_000_000)
-    t0 = time.time()
-    out_rows["tpch_q1"] = (
-        big_li.groupBy("l_returnflag", "l_linestatus")
-        .agg(F.sum("l_quantity"), F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
-        .count()
-    )
-    t["tpch_q1"] = round(time.time() - t0, 2)
-
-    print(
-        json.dumps(
-            {
-                "emb_rows": n_emb,
-                "doc_rows": docs.count() * DOC_COPIES,
-                "lineitem_rows": li.count() * LI_COPIES,
-                "times_sec": t,
-                "out_rows": out_rows,
-            }
-        )
-    )
-    spark.stop()
+PROBES = {"funnel": funnel_probe, "cores": core_scaling_probe}
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "recall":
-        recall_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "dedup":
-        dedup_caps_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "pq":
-        pq_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "span":
-        span_bloom_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "pca":
-        pca_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "graph":
-        graph_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "linkage":
-        linkage_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "cdc":
-        cdc_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "zorder":
-        zorder_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "binq":
-        binq_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "lake":
-        lake_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "lake_overcap":
-        lake_overcap_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "lake_bloom":
-        lake_bloom_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "lake_composite":
-        lake_composite_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "incr":
-        incr_dedup_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "cdf_resync":
-        cdf_resync_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "curate":
-        curate_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "decay":
-        companion_decay_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "funnel":
-        funnel_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "cores":
-        core_scaling_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "chrome":
-        chrome_strip_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "ivf_takedown":
-        ivf_takedown_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "urls":
-        url_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "buckets":
-        bucket_probe()
-    elif len(sys.argv) > 1 and sys.argv[1] == "takedown":
-        takedown_probe()
-    else:
-        main()
+    if len(sys.argv) != 2 or sys.argv[1] not in PROBES:
+        sys.exit(f"usage: python scale_probe.py {{{'|'.join(PROBES)}}}")
+    PROBES[sys.argv[1]]()

@@ -264,19 +264,24 @@ def test_ngram_shingle_persist_is_scoped(spark, docs, op):
     assert _released_since(spark, before), "shingle checkpoint never released"
 
 
-def _graph_op(spark, name):
+_SMALL_GRAPH = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (6, 7)]
+# a triangle with a 38-edge tail: 6+ rounds of components, all 8 rounds of
+# label propagation and 20 peels of the 2-core (one tail node per peel)
+_TAILED_TRIANGLE = [(1, 2), (2, 3), (3, 1)] + [(i, i + 1) for i in range(3, 41)]
+
+
+def _graph_op(spark, name, rows):
     from penr_oz_agent_memory_rust_spark.operators import components
     from penr_oz_agent_memory_rust_spark.operators.graph_stats import kcore, triangle_stats
     from penr_oz_agent_memory_rust_spark.operators.label_prop import label_propagation
     from penr_oz_agent_memory_rust_spark.operators.pagerank import pagerank
 
-    rows = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (6, 7)]
     if name == "components":
         return components.connected_components(spark.createDataFrame(rows, "a bigint, b bigint"))
     edges = spark.createDataFrame(rows, "src bigint, dst bigint")
     if name == "label_prop":
         seeds = spark.createDataFrame([(1, 7), (6, 9)], "id bigint, label bigint")
-        return label_propagation(edges, seeds, iters=2)
+        return label_propagation(edges, seeds, iters=8)
     if name == "pagerank":
         return pagerank(edges, iters=2)
     if name == "kcore":
@@ -284,20 +289,28 @@ def _graph_op(spark, name):
     return triangle_stats(edges)
 
 
-@pytest.mark.parametrize("limit", [2_000_000, 0, 2], ids=["local", "distributed", "overflow"])
+@pytest.mark.parametrize(
+    "limit, rows",
+    [(2_000_000, _SMALL_GRAPH), (0, _SMALL_GRAPH), (2, _SMALL_GRAPH), (0, _TAILED_TRIANGLE)],
+    ids=["local", "distributed", "overflow", "rounds"],
+)
 @pytest.mark.parametrize("op", ["components", "label_prop", "pagerank", "kcore", "triangles"])
-def test_graph_operator_leaves_nothing_persisted(spark, monkeypatch, op, limit):
+def test_graph_operator_leaves_nothing_persisted(spark, monkeypatch, op, limit, rows):
     """The size-probed split persists the edge frame for its probe, and the
-    Spark loops persist and checkpoint per round; once the caller drops
-    the result, executor storage is back to baseline on every path (the
+    Spark loops persist and checkpoint per round, releasing each round's
+    checkpoint once the next is written: while the caller holds the result,
+    at most its own checkpoint stays in executor storage, and once the
+    caller drops it, storage is back to baseline on every path (the
     overflow path collects 3 edges, one over the limit, and then loops in
-    Spark)."""
+    Spark; the rounds path runs many rounds)."""
     from penr_oz_agent_memory_rust_spark import localdata
 
     monkeypatch.setattr(localdata, "LOCAL_EDGE_LIMIT", limit)
     before = _persistent_rdd_ids(spark)
-    out = _graph_op(spark, op)
+    out = _graph_op(spark, op, rows)
     assert out.collect()
+    held = _persistent_rdd_ids(spark) - before
+    assert len(held) <= 1, f"{op} kept {len(held)} frames while the result is held: {held}"
     del out
     assert _released_since(spark, before), f"{op} left frames persisted"
 
@@ -1428,8 +1441,8 @@ def test_curate_funnel_structural_line_strip_prestage(spark):
     site's pages share header/footer chrome: the kept set equals the
     no-strip run (acceptance is raw-text exact Jaccard either way) and
     the true near-dup pair still collapses. The candidate-mass cut the
-    strip buys is measured at scale by scale_probe.py's chrome probe,
-    not here."""
+    strip buys at scale is in PLANS.md "Round-10: strip_common_lines at
+    10M docs", not here."""
     from penr_oz_agent_memory_rust_spark.operators import dedup
 
     chrome_a = "welcome to site alpha\ncookie consent banner text here"

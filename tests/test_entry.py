@@ -5,6 +5,8 @@ rules). Catches engine/oracle drift before the driver does."""
 
 from __future__ import annotations
 
+import json
+import os
 
 import duckdb
 import pytest
@@ -76,6 +78,26 @@ def test_no_oracle_queries_run(spark, sf_dir, name):
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
+
+
+def test_unbenched_names_are_registered():
+    """A typo in the unbenched set would otherwise surface only as a
+    benched query that was meant to be skipped."""
+    assert entrymod.UNBENCHED <= set(ALL_QUERIES)
+
+
+def test_bench_headline_has_no_duplicates():
+    import bench
+
+    assert len(bench.HEADLINE) == len(set(bench.HEADLINE))
+
+
+def test_registry_prefix_is_the_certified_window():
+    """The driver certifies the registry's first 50 names; the last
+    certification record lists them in order."""
+    with open(os.path.join(os.path.dirname(entrymod.__file__), "CORRECTNESS_r11.json")) as f:
+        window = list(json.load(f))
+    assert list(ALL_QUERIES)[:50] == window
 
 
 def test_approx_distinct_within_rsd(spark, sf_dir):

@@ -100,16 +100,16 @@ def main() -> None:
         plan = physical_plan(qs[name](spark, SF))
         # keep the tree + the scan detail sections, truncating codegen noise
         out += [f"## {name}", "", f"*{why}*", "", "```", plan.strip()[:4000], "```", ""]
-    # keep the measured recall section (appended by scale_probe work) intact
-    recall = ""
+    # keep the measured probe sections (everything from the marker on) intact
+    probes = ""
     plans_path = os.path.join(REPO, "PLANS.md")
     if os.path.exists(plans_path):
         prev = open(plans_path).read()
-        marker = "## Recall probe"
+        marker = "## Scale probe results"
         if marker in prev:
-            recall = "\n" + prev[prev.index(marker):].rstrip() + "\n"
+            probes = "\n" + prev[prev.index(marker):].rstrip() + "\n"
     with open(plans_path, "w") as f:
-        f.write("\n".join(out) + recall)
+        f.write("\n".join(out) + probes)
     print(f"wrote PLANS.md ({len(out)} lines)")
     spark.stop()
 

@@ -9,7 +9,7 @@ attributed to scan / exchange / Python / agg before touching code.
 Usage:
     python tools/profile_queries.py query [query ...]
 
-Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default all cores).
 """
 
 from __future__ import annotations
@@ -17,12 +17,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from bench import time_query, warm_up
 from penr_oz_agent_memory_rust_spark.session import get_spark
 
 
@@ -38,32 +38,13 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="poz-profile", ui_enabled=True)
     qs = entrymod.queries()
-    spark.range(1000).selectExpr("sum(id)").collect()
-    qs["deterministic_sample"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    import pandas as pd  # noqa: F401
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _warm(v):
-        import numpy as np
-
-        return v * np.float64(1.0)
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    (
-        spark.range(cpus * 2).repartition(cpus)
-        .select(_warm(F.col("id").cast("double")))
-        .write.format("noop").mode("overwrite").save()
-    )
+    warm_up(spark, qs, sf_dir)
 
     for name in names:
         pre_stages = {s["stageId"] for s in _rest(spark, "/stages")}
         pre_jobs = {j["jobId"] for j in _rest(spark, "/jobs")}
         spark.sparkContext.setJobDescription(f"profile:{name}")
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall = time.time() - t0
+        wall = time_query(qs[name], spark, sf_dir)
         spark.sparkContext.setJobDescription(None)
         stages = [s for s in _rest(spark, "/stages") if s["stageId"] not in pre_stages]
         jobs = [j for j in _rest(spark, "/jobs") if j["jobId"] not in pre_jobs]

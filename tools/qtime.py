@@ -4,7 +4,7 @@ interleaved rounds, min) for a SUBSET of queries while iterating.
 Usage:
     python tools/qtime.py [-n RUNS] query [query ...]
 
-Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default all cores).
 Prints one line per query: min / all samples. Labels jobs so the UI (if
 enabled) attributes stages to queries.
 """
@@ -14,11 +14,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from bench import time_query, warm_up
 from penr_oz_agent_memory_rust_spark.session import get_spark
 
 
@@ -32,37 +32,12 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="poz-qtime")
     qs = entrymod.queries()
-    # same warmup as bench.py: JVM + parquet footers + python worker pool
-    spark.range(1000).selectExpr("sum(id)").collect()
-    qs["deterministic_sample"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _warm(v):
-        import numpy as np
-
-        return v * np.float64(1.0)
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    (
-        spark.range(cpus * 2)
-        .repartition(cpus)
-        .select(_warm(F.col("id").cast("double")))
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
+    warm_up(spark, qs, sf_dir)
     samples: dict[str, list[float]] = {n: [] for n in names}
     for _ in range(runs):
         for name in names:
             spark.sparkContext.setJobDescription(f"qtime:{name}")
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples[name].append(round(time.time() - t0, 3))
+            samples[name].append(time_query(qs[name], spark, sf_dir))
             spark.sparkContext.setJobDescription(None)
     for name in names:
         ts = samples[name]
