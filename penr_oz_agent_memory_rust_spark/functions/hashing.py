@@ -60,6 +60,16 @@ def cpu_rebalance(df):
     return df
 
 
+def word_shingle_set(toks: list, n: int) -> set:
+    """The distinct n-word shingles of a token list, space-joined; the
+    whole (joined) list when it has at most n tokens. Shared by every
+    Arrow-batched word-shingle UDF (this module's arrays and the MinHash
+    fold in operators/dedup.py), so all of them see one shingle set."""
+    if len(toks) <= n:
+        return {" ".join(toks)}
+    return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+
+
 def word_shingle_arrays(docs, id_col: str, text_col: str, n: int = 3, rebalance: bool = True):
     """(id, shs) rows where shs is the DISTINCT n-word shingle strings of
     the text as an array — the pre-explode form of word_shingle_rows, via
@@ -87,15 +97,9 @@ def word_shingle_arrays(docs, id_col: str, text_col: str, n: int = 3, rebalance:
         docs = cpu_rebalance(docs)
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def _shingles(texts: pd.Series) -> pd.Series:
-        def sh(t):
-            if t is None:
-                return None
-            toks = t.lower().split(" ")
-            if len(toks) <= n:
-                return [" ".join(toks)]
-            return list({" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)})
-
-        return texts.map(sh)
+        return texts.map(
+            lambda t: None if t is None else list(word_shingle_set(t.lower().split(" "), n))
+        )
 
     return docs.select(F.col(id_col), _shingles(F.col(text_col)).alias("shs"))
 

@@ -6,9 +6,9 @@ core, peripheral = rare content) used to stratify sampling. No counterpart
 in the reference (which has no graph surface); this demonstrates the
 iterative-algorithm pattern done Spark-first: each power iteration is one
 join + one hash aggregation, nothing is ever collected, and lineage is cut
-by persisting the loop-invariant edge table once and (optionally)
-localCheckpoint-ing ranks every few iterations so a 50-iteration run on a
-real cluster does not re-derive iteration 1's shuffle.
+by persisting the loop-invariant edge table once and checkpointing ranks
+every `CHECKPOINT_EVERY` iterations so a 50-iteration run on a real
+cluster does not re-derive iteration 1's shuffle.
 
 Determinism: double-precision contributions are rounded per iteration
 (12 dp — far above summation noise of ~1e-15, far below rank scale), so a
@@ -21,7 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StructType
 
-from penr_oz_agent_memory_rust_spark.localdata import _size_probed
+from penr_oz_agent_memory_rust_spark.localdata import _size_probed, next_round
+
+# Iterations between the Spark loop's lineage-cutting rank checkpoints
+# (0: only the final one). Read at call time.
+CHECKPOINT_EVERY = 8
 
 
 def _round_half_up(x: float, dp: int) -> float:
@@ -77,7 +81,6 @@ def pagerank(
     iters: int = 3,
     damping: float = 0.85,
     round_dp: int = 12,
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """Power-iteration PageRank on a directed edge list. Returns
     (id, rank) for every node appearing as src or dst, rank rounded to
@@ -89,6 +92,9 @@ def pagerank(
     edges themselves shuffle ONCE at persist time. Dangling nodes (no
     out-edges) contribute nothing, matching the classic simplified
     formulation; every node still receives the (1-d)/N teleport mass.
+    Every `CHECKPOINT_EVERY` iterations the ranks are checkpointed through
+    `localdata.next_round`, which releases the previous checkpoint, so
+    the held result is the only one left stored.
 
     Small graphs run the power iteration driver-locally over the collected
     edge list (`localdata._size_probed`; the r10 profile counted 24 jobs
@@ -101,13 +107,12 @@ def pagerank(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
         lambda rows: _local_pagerank(rows, iters, damping, round_dp),
         StructType().add("id", edges.schema[src_col].dataType).add("rank", "double"),
-        lambda e: _distributed_pagerank(e, iters, damping, round_dp, checkpoint_every),
+        lambda e: _distributed_pagerank(e, iters, damping, round_dp),
     )
 
 
-def _distributed_pagerank(
-    edges: DataFrame, iters: int, damping: float, round_dp: int, checkpoint_every: int
-) -> DataFrame:
+def _distributed_pagerank(edges: DataFrame, iters: int, damping: float, round_dp: int) -> DataFrame:
+    every = CHECKPOINT_EVERY
     e = edges.repartition("src").persist()
     nodes = (
         e.select(F.col("src").alias("id"))
@@ -120,6 +125,7 @@ def _distributed_pagerank(
     e_deg = e.join(deg, "src").persist()
     teleport = (1.0 - damping) / n
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
+    held = None  # the last checkpoint of ranks, released by the next one
     for i in range(iters):
         contribs = (
             e_deg.join(ranks.withColumnRenamed("id", "src"), "src")
@@ -137,14 +143,14 @@ def _distributed_pagerank(
                 round_dp,
             ).alias("rank"),
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iters:
+        if every and (i + 1) % every == 0 and i + 1 < iters:
             # cut lineage on long runs; materializes ranks (node-sized)
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = held = next_round(held, ranks)
     # materialize the final ranks (node-sized) so the loop-invariant caches
     # can be released NOW — without this, every invocation leaks three
     # persisted frames into the session and repeated calls churn the block
     # manager (observed as a 20 s outlier on an otherwise 1.5 s bench run)
-    out = ranks.localCheckpoint(eager=True)
+    out = next_round(held, ranks)
     for df in (e_deg, nodes, e):
         df.unpersist()
     return out

@@ -283,7 +283,8 @@ def _graph_op(spark, name, rows):
         seeds = spark.createDataFrame([(1, 7), (6, 9)], "id bigint, label bigint")
         return label_propagation(edges, seeds, iters=8)
     if name == "pagerank":
-        return pagerank(edges, iters=2)
+        # the rounds case runs past two mid-run checkpoints (iterations 8, 16)
+        return pagerank(edges, iters=17 if rows is _TAILED_TRIANGLE else 2)
     if name == "kcore":
         return kcore(edges, k=2)
     return triangle_stats(edges)
@@ -957,29 +958,37 @@ def test_neardup_keep_best_clusters_singletons_and_ties(spark):
 
 
 def test_minhash_est_pairs_matches_lsh_candidates_and_signature_agreement(spark, sf_dir):
+    """Both candidate generators share one banding path, uncapped and with
+    a stop-bucket cap small enough to drop buckets on this corpus."""
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", "text")
         .limit(200)
     )
-    est = dedup.minhash_est_pairs(docs, n_hashes=12, bands=4)
-    rows = {(r["a"], r["b"]): r["est_jaccard"] for r in est.collect()}
-    lsh = {
-        (r["a"], r["b"])
-        for r in dedup.minhash_lsh_pairs(docs, n_hashes=12, bands=4).collect()
-    }
-    assert set(rows) == lsh  # identical candidate set (same slices, same bands)
     sigs = {
         r["doc_id"]: [r[f"h{j}"] for j in range(12)]
         for r in dedup.minhash_signatures(docs, n_hashes=12).collect()
     }
-    for (a, b), e in rows.items():
-        agree = sum(x == y for x, y in zip(sigs[a], sigs[b]))
-        assert e == round(agree / 12.0, 6), (a, b)
-    # banding guarantees >= one full band agrees => est >= 1/bands... only
-    # if the matching band's rows are the agreeing functions; pin the
-    # weaker invariant that every candidate shares >= r agreeing hashes
-    assert all(e >= round(3 / 12.0, 6) for e in rows.values())
+    cands = {}
+    for max_bucket in (None, 2):
+        est = dedup.minhash_est_pairs(docs, n_hashes=12, bands=4, max_bucket=max_bucket)
+        rows = {(r["a"], r["b"]): r["est_jaccard"] for r in est.collect()}
+        lsh = {
+            (r["a"], r["b"])
+            for r in dedup.minhash_lsh_pairs(
+                docs, n_hashes=12, bands=4, max_bucket=max_bucket
+            ).collect()
+        }
+        assert set(rows) == lsh, max_bucket  # same slices, same bands, same cap
+        for (a, b), e in rows.items():
+            agree = sum(x == y for x, y in zip(sigs[a], sigs[b]))
+            assert e == round(agree / 12.0, 6), (a, b)
+        # banding guarantees >= one full band agrees => est >= 1/bands... only
+        # if the matching band's rows are the agreeing functions; pin the
+        # weaker invariant that every candidate shares >= r agreeing hashes
+        assert all(e >= round(3 / 12.0, 6) for e in rows.values())
+        cands[max_bucket] = lsh
+    assert cands[2] < cands[None]  # the cap dropped at least one bucket
 
 
 def test_minhash_est_pairs_threshold_and_validation(spark):
@@ -992,6 +1001,10 @@ def test_minhash_est_pairs_threshold_and_validation(spark):
     assert len(out) == 1
     with pytest.raises(ValueError, match="divide"):
         dedup.minhash_est_pairs(docs, n_hashes=12, bands=5)
+    # the stored band index checks the same way (not by an assert, which
+    # `python -O` skips, and bands=5 would then drop h10 and h11)
+    with pytest.raises(ValueError, match="divide"):
+        dedup.lsh_band_rows(docs, n_hashes=12, bands=5)
 
 
 def test_minhash_calibration_hand_checked(spark):
